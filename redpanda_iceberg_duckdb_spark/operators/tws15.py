@@ -69,7 +69,9 @@ def _write_chunked_events(spark: SparkSession, sf_dir: str, tmp: str) -> None:
     oldest-first (modification time, path as tiebreak); a single
     parallel write leaves near-tied mtimes, so pin strictly increasing
     ones explicitly — the paths (pchunk=0 < pchunk=1 < ...) agree under
-    either ordering."""
+    either ordering. That pinning needs exactly one file per chunk
+    directory; an empty chunk (no directory) or a split one raises
+    instead of silently replaying out of order."""
     import glob
     import time as _t
 
@@ -89,8 +91,12 @@ def _write_chunked_events(spark: SparkSession, sf_dir: str, tmp: str) -> None:
      .write.mode("overwrite").partitionBy("pchunk").parquet(tmp))
     now = _t.time()
     for i in range(_N_CHUNKS):
-        for f in glob.glob(os.path.join(tmp, f"pchunk={i}", "*.parquet")):
-            os.utime(f, (now + i, now + i))
+        files = glob.glob(os.path.join(tmp, f"pchunk={i}", "*.parquet"))
+        if len(files) != 1:
+            raise RuntimeError(
+                f"tws replay chunk {i} holds {len(files)} parquet files, "
+                "expected exactly 1 — replay order would be lost")
+        os.utime(files[0], (now + i, now + i))
 
 
 def chunked_tws_replay(spark: SparkSession, sf_dir: str, *,

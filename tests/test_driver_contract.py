@@ -171,9 +171,10 @@ def test_ntz_fallback_path_matches_default(spark, sf_smoke, monkeypatch):
     configure_session (called by load_table inside every query) would flip
     the reader conf back to false, so without intervention the re-run would
     exercise the reader fix, not the cast fallback. Monkeypatching it to a
-    no-op pins NTZ inference ON for the whole query execution — the parquet
-    scan genuinely produces timestamp_ntz and only the _post_load cast can
-    restore the semantics."""
+    no-op pins NTZ inference ON for the whole query execution. An inferred
+    read (the precondition below) genuinely produces timestamp_ntz and the
+    _post_load cast restores it; load_table itself reads with the declared
+    TIMESTAMP schema, so the queries must not notice the reader conf."""
     from redpanda_iceberg_duckdb_spark import tables
     from redpanda_iceberg_duckdb_spark.registry import all_queries
 
@@ -232,7 +233,65 @@ def test_configure_session_is_set_free_when_configured(spark):
     assert calls == [], calls
 
 
-@pytest.mark.oracle_sf2
+def test_get_spark_disables_call_site_capture(spark):
+    from pyspark.errors.utils import is_debugging_enabled
+
+    from redpanda_iceberg_duckdb_spark.session import _DATAFRAME_DEBUGGING
+
+    assert spark.conf.get(_DATAFRAME_DEBUGGING).lower() == "false"
+    assert not is_debugging_enabled()
+
+
+@pytest.mark.parametrize("expr, condition", [
+    ("assert_true", "USER_RAISED_EXCEPTION"),
+    ("divide", "DIVIDE_BY_ZERO"),
+])
+def test_failing_expression_keeps_error_class(spark, expr, condition):
+    """With call-site capture off, a runtime failure still raises a
+    PySparkException carrying its error class; only the Python file:line
+    note is gone from the message."""
+    from pyspark.errors import PySparkException
+    from pyspark.sql import functions as F
+
+    df = spark.range(1)
+    col = (F.assert_true(F.col("id") > 0) if expr == "assert_true"
+           else F.lit(1) / F.col("id"))
+    with pytest.raises(PySparkException) as info:
+        df.select(col).collect()
+    assert info.value.getCondition() == condition
+
+
+def test_configure_session_never_sets_static_debugging_conf(spark):
+    """spark.python.sql.dataFrameDebugging.enabled is static: setting it on
+    a live session raises CANNOT_MODIFY_STATIC_CONFIG. configure_session
+    wraps all its sets in one try, so the conf inside it would swallow that
+    error and skip every setting after it — it belongs in get_spark only."""
+    from pyspark.errors import PySparkException
+
+    from redpanda_iceberg_duckdb_spark.session import (
+        _DATAFRAME_DEBUGGING, configure_session)
+
+    with pytest.raises(PySparkException) as info:
+        spark.conf.set(_DATAFRAME_DEBUGGING, "true")
+    assert info.value.getCondition() == "CANNOT_MODIFY_STATIC_CONFIG"
+
+    calls = []
+
+    class UnconfiguredConf:
+        def get(self, key, default=None):
+            return default
+
+        def set(self, key, value):
+            calls.append(key)
+
+    class Wrapper:
+        conf = UnconfiguredConf()
+        sparkContext = spark.sparkContext
+
+    configure_session(Wrapper())
+    assert calls and _DATAFRAME_DEBUGGING not in calls, calls
+
+
 def test_no_hugeint_oracle_outputs(spark, sf_smoke):
     """The driver's value hash is TYPE-sensitive: DuckDB widens sum(BIGINT)
     to HUGEINT, which hash-mismatches Spark's bigint even when every value
@@ -241,10 +300,8 @@ def test_no_hugeint_oracle_outputs(spark, sf_smoke):
     HUGEINT/INT128, and integer/double/string class mismatches vs the Spark
     schema are errors too.
 
-    Second-tier marker (r16 item 1): this is a ~3 min registry-wide
-    static guard against NEW oracle SQL — build-round code, not anything
-    the default verify window needs to re-prove; it runs with the
-    oracle_sf2 tier."""
+    Default suite: it needs no second SF, and with declared table schemas
+    building every query's plan launches no schema-inference job."""
     import duckdb
 
     from tests.oracle_harness import duckdb_conn

@@ -17,14 +17,17 @@ import __spark_entry__ as entry_mod
 from redpanda_iceberg_duckdb_spark.plans import doctor
 from redpanda_iceberg_duckdb_spark.registry import all_queries
 
-# (code, reason) tolerances. A query absent here must audit clean.
+_OFFSETS = ("offsets window over the per-partition/bucket count table "
+            "(partition-count rows, the stable_row_ids_two_phase pattern)")
+_CURVE = "cumulative/lag window over a curve- or grid-bounded frame"
+
+# (code, reason) tolerances, one list for the window audit and the
+# whole-registry sweep. A query absent here must audit clean.
 ALLOW: dict[str, dict[str, str]] = {
     # 1x1 scalar combines compile to a cartesian of single-row frames.
     "funnel_view_click_purchase": {
         "cartesian": "final 1x1x1 combine of per-step scalar aggregates"},
-    # Migrated from ALLOW_FULL when the query entered the r15 pending
-    # window (the r15 checkpoint rewrite did not add this window — the
-    # BH rank was always a global row_number over the m=10 p-value rows).
+    # The BH rank is a global row_number over the m=10 p-value rows.
     "bh_fdr_discoveries": {
         "global-window": "offsets window over the per-partition/bucket "
                          "count table (m=10 hypothesis rows, the "
@@ -62,59 +65,12 @@ ALLOW: dict[str, dict[str, str]] = {
     "anderson_darling_value": {
         "global-window": "ECDF cumulative over the distinct-cents value "
                          "lattice (ks_two_sample's bounded domain)"},
-}
-
-_WINDOW = [n for n in (entry_mod._VERIFY_FIRST
-                       + entry_mod._PENDING_NEXT_WINDOW)
-           # Streaming replays drive a full availableNow stream inside the
-           # builder; their returned frame is a tiny telemetry table whose
-           # plan says nothing about the streaming job — skip. Names not
-           # yet registered (window slots pre-declared for queries being
-           # built this round) are skipped here; the driver's
-           # _ordered_queries applies the same existence filter.
-           if "replay" not in n and n in all_queries()]
-
-
-@pytest.mark.parametrize("name", _WINDOW)
-def test_window_query_plan_audit(spark, sf_smoke, name):
-    q = all_queries()[name]
-    allow = tuple(ALLOW.get(name, {}))
-    found = doctor.audit(q.fn(spark, sf_smoke), allow=allow)
-    assert not found, (name, found)
-
-
-# Whole-registry sweep (round-13 verdict item 8): every registered query,
-# not just the current window — older queries were audited when they
-# ENTERED a window, but a Spark upgrade can shift their plans without
-# touching their fingerprints. Slow (~minutes at sf0.001), so gated behind
-# `pytest -m plandoctor_full` (deselected by default via pytest.ini);
-# run it once per round / after any Spark version bump.
-_FULL = sorted(n for n in all_queries() if "replay" not in n)
-
-# Allowances for queries OUTSIDE the current window (same contract as
-# ALLOW: each entry states why the finding is accepted). Entries migrate
-# here from ALLOW when their query leaves the window. First populated by
-# the round-14 inaugural full sweep: 37 initial findings -> 9 exempted by
-# the doctor's new plan-proven-bounded rule (a GlobalLimit /
-# TakeOrderedAndProject below the window), 2 fixed for real (the UDTFs
-# now run Arrow-batched), 26 recorded here after reading each query.
-_OFFSETS = ("offsets window over the per-partition/bucket count table "
-            "(partition-count rows, the stable_row_ids_two_phase pattern)")
-_CURVE = "cumulative/lag window over a curve- or grid-bounded frame"
-ALLOW_FULL: dict[str, dict[str, str]] = {
-    "nelson_aalen_hazard": {
-        "global-window": "cumulative window over the distinct-duration "
-                         "curve table"},
-    "sax_hourly_motifs": {
-        "global-window": "lead window over 4-hour PAA segments "
-                         "(time-range-bounded)"},
-    "average_precision_purchases": {
-        "global-window": "offsets window over the score histogram (KBs)"},
-    "funnel_view_click_purchase": {
-        "cartesian": "final 1x1x1 combine of per-step scalar aggregates"},
+    # From the round-14 inaugural full sweep: 37 initial findings -> 9 exempted by the
+    # doctor's plan-proven-bounded rule (a GlobalLimit /
+    # TakeOrderedAndProject below the window), 2 fixed for real (the
+    # UDTFs now run Arrow-batched), 26 recorded after reading each query.
     # two-phase global-rank offsets pattern:
     "auc_mann_whitney": {"global-window": _OFFSETS},
-    "bh_fdr_discoveries": {"global-window": _OFFSETS},
     "epoch_shuffle_ranks": {"global-window": _OFFSETS},
     "gini_customer_spend": {"global-window": _OFFSETS},
     "qini_uplift_deciles": {"global-window": _OFFSETS},
@@ -162,11 +118,38 @@ ALLOW_FULL: dict[str, dict[str, str]] = {
                          "variant for extreme cardinality"},
 }
 
+_WINDOW = [n for n in (entry_mod._VERIFY_FIRST
+                       + entry_mod._PENDING_NEXT_WINDOW)
+           # Streaming replays drive a full availableNow stream inside the
+           # builder; their returned frame is a tiny telemetry table whose
+           # plan says nothing about the streaming job — skip. Names not
+           # yet registered (window slots pre-declared for queries being
+           # built this round) are skipped here; the driver's
+           # _ordered_queries applies the same existence filter.
+           if "replay" not in n and n in all_queries()]
+
+
+@pytest.mark.parametrize("name", _WINDOW)
+def test_window_query_plan_audit(spark, sf_smoke, name):
+    q = all_queries()[name]
+    allow = tuple(ALLOW.get(name, {}))
+    found = doctor.audit(q.fn(spark, sf_smoke), allow=allow)
+    assert not found, (name, found)
+
+
+# Whole-registry sweep (round-13 verdict item 8): every registered query,
+# not just the current window — older queries were audited when they
+# ENTERED a window, but a Spark upgrade can shift their plans without
+# touching their fingerprints. Slow (~minutes at sf0.001), so gated behind
+# `pytest -m plandoctor_full` (deselected by default via pytest.ini);
+# run it once per round / after any Spark version bump.
+_FULL = sorted(n for n in all_queries() if "replay" not in n)
+
 
 @pytest.mark.plandoctor_full
 @pytest.mark.parametrize("name", _FULL)
 def test_full_registry_plan_audit(spark, sf_smoke, name):
     q = all_queries()[name]
-    allow = tuple({**ALLOW_FULL.get(name, {}), **ALLOW.get(name, {})})
+    allow = tuple(ALLOW.get(name, {}))
     found = doctor.audit(q.fn(spark, sf_smoke), allow=allow)
     assert not found, (name, found)

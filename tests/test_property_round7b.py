@@ -11,19 +11,12 @@ independent pure-Python reference on hypothesis-generated inputs:
 
 from __future__ import annotations
 
-import glob
-import shutil
-
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from redpanda_iceberg_duckdb_spark.registry import all_queries
 
-
-def _write_single(df, out_dir, name):
-    df.coalesce(1).write.parquet(str(out_dir / f"_tmp_{name}"))
-    part = glob.glob(str(out_dir / f"_tmp_{name}" / "part-*.parquet"))[0]
-    shutil.copy(part, str(out_dir / f"{name}.parquet"))
+from .table_fixtures import write_single
 
 
 # ------------------------------------------------- content-defined chunking
@@ -53,7 +46,7 @@ def test_cdc_chunker_matches_python_replica(spark, tmp_path_factory, texts):
         rows, "doc_id long, text string, lang string, source string, "
               "n_chars long")
     out = tmp_path_factory.mktemp("cdcprop")
-    _write_single(df, out, "documents")
+    write_single(df, out, "documents")
     q = all_queries()["cdc_chunk_stats"]
     got = {r.doc_id: r for r in q.fn(spark, str(out)).collect()}
     assert set(got) == set(range(len(texts)))
@@ -101,7 +94,7 @@ def test_ppjoin_zero_false_negatives_on_random_corpora(
         rows, "doc_id long, text string, lang string, source string, "
               "n_chars long")
     out = tmp_path_factory.mktemp("ppprop")
-    _write_single(df, out, "documents")
+    write_single(df, out, "documents")
     q = all_queries()["ppjoin_exact_pairs"]
     got = {(r.d1, r.d2) for r in q.fn(spark, str(out)).collect()}
     assert got == _brute_pairs(texts)
@@ -139,8 +132,8 @@ def test_pagerank_matches_python_integer_recurrence(
     odf = spark.createDataFrame(orders, "o_orderkey long, o_custkey long")
     ldf = spark.createDataFrame(lineitem, "l_orderkey long, l_suppkey long")
     out = tmp_path_factory.mktemp("prprop")
-    _write_single(odf, out, "orders")
-    _write_single(ldf, out, "lineitem")
+    write_single(odf, out, "orders")
+    write_single(ldf, out, "lineitem")
     q = all_queries()["pagerank_trade_graph"]
     rows = q.fn(spark, str(out)).collect()
     want = _py_pagerank(set(cs_edges))

@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 
 from redpanda_iceberg_duckdb_spark.registry import all_queries
 
+from .table_fixtures import write_single
+
 
 def test_edge_cache_misses_on_data_rewrite(spark, tmp_path):
     """Rewriting the parquet under an sf_dir within one Spark application
@@ -328,7 +330,7 @@ def test_dsir_selects_target_domain_docs(spark, tmp_path):
     d = str(tmp_path / "ds")
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, "
-              "n_chars int"
+              "n_chars long"
     ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
 
     got = dsir_importance_topk(spark, d).collect()
@@ -368,11 +370,10 @@ def test_bipartite_projection_hub_cap_binds(spark, tmp_path):
                 "o_orderpriority string"
     ).withColumn("o_orderdate", F.col("o_orderdate").cast("timestamp")) \
      .write.mode("overwrite").parquet(f"{d}/orders.parquet")
-    spark.createDataFrame(
+    write_single(spark.createDataFrame(
         rows_l, "l_orderkey long, l_suppkey long, l_extendedprice double, "
                 "l_discount double, l_shipdate string"
-    ).withColumn("l_shipdate", F.col("l_shipdate").cast("timestamp")) \
-     .write.mode("overwrite").parquet(f"{d}/lineitem.parquet")
+    ), tmp_path / "ds", "lineitem")
 
     got = bipartite_supplier_projection(spark, d).collect()
     assert got, "projection empty"
@@ -591,7 +592,7 @@ def test_shapley_efficiency_and_planted_attribution(spark, tmp_path):
     d = str(tmp_path / "ds")
     spark.createDataFrame(
         docs, "doc_id long, text string, lang string, source string, "
-              "n_chars int"
+              "n_chars long"
     ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
     got = {r.grp: r.shapley_value for r in
            shapley_source_value(spark, d).collect()}

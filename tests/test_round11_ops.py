@@ -280,7 +280,7 @@ def test_hyperplane_lsh_finds_planted_neardups(spark, tmp_path):
     os.makedirs(d, exist_ok=True)
     _write(spark, f"{d}/embeddings.parquet",
            [(v, [float(x) for x in e], lbl) for v, e, lbl in rows],
-           "vec_id long, embedding array<float>, label long")
+           "vec_id long, embedding array<float>, label int")
     q = all_queries()["hyperplane_lsh_near_dups"]
     run_compare(spark, q, d)
     out = q.fn(spark, d).collect()
@@ -301,7 +301,7 @@ def test_pq_distortion_zero_when_vector_is_centroid(spark, tmp_path):
     d = str(tmp_path / "pq")
     os.makedirs(d, exist_ok=True)
     _write(spark, f"{d}/embeddings.parquet", rows,
-           "vec_id long, embedding array<float>, label long")
+           "vec_id long, embedding array<float>, label int")
     q = all_queries()["pq_code_distortion"]
     run_compare(spark, q, d)
     out = q.fn(spark, d).collect()
@@ -516,7 +516,7 @@ def test_davies_bouldin_zero_scatter_clusters(spark, tmp_path):
     d = str(tmp_path / "db")
     os.makedirs(d, exist_ok=True)
     _write(spark, f"{d}/embeddings.parquet", rows,
-           "vec_id long, embedding array<float>, label long")
+           "vec_id long, embedding array<float>, label int")
     q = all_queries()["davies_bouldin_clusters"]
     run_compare(spark, q, d)
     out = q.fn(spark, d).collect()
@@ -598,7 +598,7 @@ def test_pq_adc_perfect_recall_on_pure_clusters(spark, tmp_path):
     d = str(tmp_path / "adc")
     os.makedirs(d, exist_ok=True)
     _write(spark, f"{d}/embeddings.parquet", rows,
-           "vec_id long, embedding array<float>, label long")
+           "vec_id long, embedding array<float>, label int")
     q = all_queries()["pq_adc_recall_at_5"]
     run_compare(spark, q, d)
     out = q.fn(spark, d).collect()
@@ -620,7 +620,7 @@ def test_ivf_pq_perfect_recall_on_pure_clusters(spark, tmp_path):
     d = str(tmp_path / "ivfpq")
     os.makedirs(d, exist_ok=True)
     _write(spark, f"{d}/embeddings.parquet", rows,
-           "vec_id long, embedding array<float>, label long")
+           "vec_id long, embedding array<float>, label int")
     q = all_queries()["ivf_pq_recall_at_5"]
     run_compare(spark, q, d)
     out = q.fn(spark, d).collect()

@@ -5,20 +5,12 @@ table contract) re-proves Spark-vs-DuckDB parity on the same file."""
 
 from __future__ import annotations
 
-import glob
-import shutil
-
 import numpy as np
 
 from redpanda_iceberg_duckdb_spark.registry import all_queries
 
 from .oracle_harness import run_compare
-
-
-def _write_single(df, out_dir, name):
-    df.coalesce(1).write.parquet(str(out_dir / f"_tmp_{name}"))
-    part = glob.glob(str(out_dir / f"_tmp_{name}" / "part-*.parquet"))[0]
-    shutil.copy(part, str(out_dir / f"{name}.parquet"))
+from .table_fixtures import write_single
 
 
 # ---------------------------------------------------------------- semdedup
@@ -41,7 +33,7 @@ def test_semdedup_drops_planted_clones_keeps_orthogonal(spark, tmp_path):
         rows, "vec_id long, embedding array<float>, label int")
     out = tmp_path / "sem"
     out.mkdir()
-    _write_single(df, out, "embeddings")
+    write_single(df, out, "embeddings")
 
     q = all_queries()["semdedup_survivors"]
     got = {r.label: r for r in q.fn(spark, str(out)).collect()}
@@ -61,7 +53,7 @@ def _docs_dir(spark, tmp_path, docs):
               "n_chars long")
     out = tmp_path / "spans"
     out.mkdir()
-    _write_single(df, out, "documents")
+    write_single(df, out, "documents")
     return str(out)
 
 
@@ -108,7 +100,7 @@ def _events_dir(spark, tmp_path, rows, name="ev"):
               "event_type string, value double, props string")
     out = tmp_path / name
     out.mkdir()
-    _write_single(df, out, "events")
+    write_single(df, out, "events")
     return str(out)
 
 
@@ -228,7 +220,7 @@ def test_bpe_pair_counts_exact(spark, tmp_path):
               "n_chars long")
     out = tmp_path / "bpe"
     out.mkdir()
-    _write_single(df, out, "documents")
+    write_single(df, out, "documents")
     q = all_queries()["bpe_pair_frequencies"]
     got = {r.pair: r.n for r in q.fn(spark, str(out)).collect()}
     assert got == {"ab": 3, "ba": 1, "bc": 1}

@@ -7,21 +7,14 @@ the same file via run_compare."""
 
 from __future__ import annotations
 
-import glob
 import hashlib
 import math
 import random
-import shutil
 
 from redpanda_iceberg_duckdb_spark.registry import all_queries
 
 from .oracle_harness import run_compare
-
-
-def _write_single(df, out_dir, name):
-    df.coalesce(1).write.parquet(str(out_dir / f"_tmp_{name}"))
-    part = glob.glob(str(out_dir / f"_tmp_{name}" / "part-*.parquet"))[0]
-    shutil.copy(part, str(out_dir / f"{name}.parquet"))
+from .table_fixtures import write_single
 
 
 def _docs_dir(spark, tmp_path, docs, name="docs"):
@@ -31,7 +24,7 @@ def _docs_dir(spark, tmp_path, docs, name="docs"):
               "n_chars long")
     out = tmp_path / name
     out.mkdir()
-    _write_single(df, out, "documents")
+    write_single(df, out, "documents")
     return str(out)
 
 
@@ -76,8 +69,8 @@ def test_pagerank_hub_supplier_outranks_leaf(spark, tmp_path):
     ldf = spark.createDataFrame(lineitem, "l_orderkey long, l_suppkey long")
     out = tmp_path / "pr"
     out.mkdir()
-    _write_single(odf, out, "orders")
-    _write_single(ldf, out, "lineitem")
+    write_single(odf, out, "orders")
+    write_single(ldf, out, "lineitem")
     q = all_queries()["pagerank_trade_graph"]
     rows = q.fn(spark, str(out)).collect()
     ranks = {(r.kind, r.key): r.rank_scaled for r in rows}
@@ -213,7 +206,7 @@ def _emb_dir(spark, tmp_path, rows, name="emb"):
         rows, "vec_id long, embedding array<float>, label int")
     out = tmp_path / name
     out.mkdir()
-    _write_single(df, out, "embeddings")
+    write_single(df, out, "embeddings")
     return str(out)
 
 
@@ -295,7 +288,7 @@ def test_kafka_wire_replay_roundtrip_counts(spark, tmp_path):
               "o_orderpriority string")
     out = tmp_path / "wire"
     out.mkdir()
-    _write_single(df, out, "orders")
+    write_single(df, out, "orders")
     q = all_queries()["kafka_wire_replay"]
     got = {r.status: r for r in q.fn(spark, str(out)).collect()}
     assert got["O"].n_msgs == 5 and got["F"].n_msgs == 5
@@ -321,7 +314,7 @@ def test_zipf_slope_perfect_law_is_minus_one(spark, tmp_path):
               "n_chars long")
     out = tmp_path / "zipf"
     out.mkdir()
-    _write_single(df, out, "documents")
+    write_single(df, out, "documents")
     q = all_queries()["zipf_fit_by_source"]
     got = {r.source: r for r in q.fn(spark, str(out)).collect()}
     assert abs(got["zipfish"].zipf_slope + 1.0) < 0.05
@@ -341,8 +334,8 @@ def test_degree_stats_star_graph(spark, tmp_path):
     ldf = spark.createDataFrame(lineitem, "l_orderkey long, l_suppkey long")
     out = tmp_path / "deg"
     out.mkdir()
-    _write_single(odf, out, "orders")
-    _write_single(ldf, out, "lineitem")
+    write_single(odf, out, "orders")
+    write_single(ldf, out, "lineitem")
     q = all_queries()["graph_degree_stats"]
     got = {r.kind: r for r in q.fn(spark, str(out)).collect()}
     assert got["supplier"].n_nodes == 2
@@ -398,8 +391,8 @@ def test_join_cardinality_audit_exact_on_known_fixture(spark, tmp_path):
     ldf = spark.createDataFrame(lineitem, "l_orderkey long, l_suppkey long")
     out = tmp_path / "card"
     out.mkdir()
-    _write_single(odf, out, "orders")
-    _write_single(ldf, out, "lineitem")
+    write_single(odf, out, "orders")
+    write_single(ldf, out, "lineitem")
     q = all_queries()["join_cardinality_audit"]
     r = q.fn(spark, str(out)).collect()[0]
     assert r.n_orders == 3 and r.n_lineitem == 6

@@ -3,6 +3,7 @@ final per-user totals must equal the batch ground truth."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F, types as T
 
 from redpanda_iceberg_duckdb_spark.streaming.stateful import running_user_totals
@@ -230,3 +231,28 @@ def test_funnel_sink_state_cardinality_equals_expected(spark, sf_smoke):
         assert n <= expected[i]["users_seen"]
         # state rows are exactly the view-users: t1 is never null
         assert state.filter(F.col("t1").isNull()).count() == 0
+
+
+def test_tws_chunk_write_rejects_empty_chunk(spark, tmp_path):
+    """Replay order pins one mtime per chunk file; events at only the two
+    ends of the time range leave chunks 1 and 2 empty, which must raise
+    instead of replaying out of order."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from redpanda_iceberg_duckdb_spark.operators.tws15 import (
+        _write_chunked_events)
+
+    t0 = dt.datetime(2024, 1, 1)
+    pq.write_table(pa.table({
+        "event_id": pa.array([1, 2], pa.int64()),
+        "ts": pa.array([t0, t0 + dt.timedelta(days=1)], pa.timestamp("us")),
+        "user_id": pa.array([1, 2], pa.int64()),
+        "event_type": ["view", "view"],
+        "value": [1.0, 2.0],
+        "props": ["{}", "{}"],
+    }), tmp_path / "events.parquet")
+    with pytest.raises(RuntimeError, match="chunk 1 holds 0 parquet files"):
+        _write_chunked_events(spark, str(tmp_path), str(tmp_path / "chunks"))
