@@ -290,6 +290,13 @@ _PENDING_NEXT_WINDOW: list[str] = [
     "sliced_wasserstein_labels", "self_bleu2_by_source",
     "holt_winters_seasonal_hourly", "variant_props_extract",
     "luhn_checksum_audit",
+    # One dataset cache (cache.py replaces dataset_cache.py and nine
+    # module-level caches) and the location-free oracle hash: 49
+    # fingerprints flipped, all re-run oracle-exact at BOTH sf0.001 and
+    # sf0.01 (tools/oracle_sim.py --changed, 49/49 + 49/49). Only
+    # seeded_trades_parity (its oracle reads a fixture by absolute path)
+    # was not already queued here or holding a window slot.
+    "seeded_trades_parity",
 ]
 
 

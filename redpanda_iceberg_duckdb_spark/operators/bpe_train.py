@@ -39,7 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..dataset_cache import data_fingerprint
+from ..cache import cached, data_fingerprint
 from ..registry import register
 from ..tables import load_table
 
@@ -103,19 +103,13 @@ _WRAP = ("concat(char(1), replace(text, ' ', concat(char(1), ' ', char(1))),"
          " char(1))")
 
 
-# (applicationId, data fingerprint, unique_weighted) -> learned merges.
-# The trained merge table is pure data derived from the corpus; the apply
-# pass (bpe_encode_stats) and both train queries share it, so retraining
-# per invocation re-paid the 10-round driver-synchronized loop every call
-# (the graphrank/quantizer_train keyed-singleton discipline, r9).
-_MERGE_CACHE: dict[tuple[str, str, bool], list] = {}
-
-
 def _train(spark: SparkSession, sf_dir: str, *,
            unique_weighted: bool = False) -> list[tuple[int, str, str, int]]:
     """Run the merge-learning loop; returns [(rank, marked_l, marked_r,
     count)] with tokens still wrapped in \x01 markers. Memoized per
-    (application, dataset, granularity) — see _MERGE_CACHE.
+    (dataset, granularity) in cache.py: the apply pass (bpe_encode_stats)
+    and both train queries share the merge table, so retraining per
+    invocation re-paid the 10-round driver-synchronized loop every call.
 
     unique_weighted=True trains at (unique text, multiplicity)
     granularity — the representation real BPE trainers use (Sennrich ACL
@@ -125,22 +119,18 @@ def _train(spark: SparkSession, sf_dir: str, *,
     corpus size to distinct-text vocabulary size. The learned merge table
     is IDENTICAL by construction (sum of mult over collapsed rows = the
     per-row count)."""
-    key = (spark.sparkContext.applicationId,
-           data_fingerprint(sf_dir, "documents") or sf_dir,
-           unique_weighted)
-    if key in _MERGE_CACHE:
-        return _MERGE_CACHE[key]
-    d = load_table(spark, sf_dir, "documents")
-    if unique_weighted:
-        enc = (d.groupBy("text").agg(F.count(F.lit(1)).alias("mult"))
-               .select(F.expr(_WRAP).alias("enc"), "mult"))
-    else:
-        enc = d.select(F.expr(_WRAP).alias("enc"),
-                       F.lit(1).alias("mult"))
-    merges = _train_encoded(enc)
-    _MERGE_CACHE.clear()   # at most one live entry — bounded memory
-    _MERGE_CACHE[key] = merges
-    return merges
+    def build() -> list[tuple[int, str, str, int]]:
+        d = load_table(spark, sf_dir, "documents")
+        if unique_weighted:
+            enc = (d.groupBy("text").agg(F.count(F.lit(1)).alias("mult"))
+                   .select(F.expr(_WRAP).alias("enc"), "mult"))
+        else:
+            enc = d.select(F.expr(_WRAP).alias("enc"),
+                           F.lit(1).alias("mult"))
+        return _train_encoded(enc)
+
+    return cached(spark, ("bpe_merges", data_fingerprint(sf_dir, "documents"),
+                          unique_weighted), build)
 
 
 def _train_encoded(enc: DataFrame) -> list[tuple[int, str, str, int]]:

@@ -84,21 +84,15 @@ def bfs_hop_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same edge spec as graph10d.copurchase_edges (pop cap _POP_CAP):
     # memoized per (application, dataset) since k-core and LPA iterate
     # over the identical graph — the ~6 s build is paid once per dataset.
-    from ..dataset_cache import data_fingerprint
     from ..session import iterate_partitions, pinned_shuffle_partitions
-    from .graph10d import copurchase_edges, copurchase_vertex_count
-    from .graph_iterate import iterate_join_strategy
+    from .graph10d import copurchase_join_strategy
 
     # r16 (verdict item 2): the r15 broadcast hints on the O(V)
     # frontier/visited iterates are gated on the measured vertex count;
     # above the gate the edge table is hash-partitioned by src once
     # (pay-once layout, guide §2.4) and the per-hop joins shuffle only
     # the iterate side — the fallback the r15 comments promised.
-    edges, hint = iterate_join_strategy(
-        spark, copurchase_edges(spark, sf_dir), "src",
-        copurchase_vertex_count(spark, sf_dir),
-        ("copurchase", data_fingerprint(sf_dir, "orders", "lineitem")
-         or sf_dir))
+    edges, hint = copurchase_join_strategy(spark, sf_dir)
 
     nodes = baskets.select("c").distinct()
     lm = edges.agg(F.min("src").alias("lmc"))

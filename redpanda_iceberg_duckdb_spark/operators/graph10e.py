@@ -90,7 +90,7 @@ def sssp_cheapest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
          .unionAll(ew.select((F.col("s") * 2 + 1).alias("src"),
                              (F.col("c") * 2).alias("dst"), "w"))
          .localCheckpoint(eager=False))  # 6 reuses: cut the lineage once
-    from ..dataset_cache import data_fingerprint
+    from ..cache import data_fingerprint
     from ..session import iterate_partitions, pinned_shuffle_partitions
     from .graph_iterate import iterate_join_strategy, vertex_count
 
@@ -99,8 +99,7 @@ def sssp_cheapest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per dataset — one count job shared by repeated calls); above the
     # gate the weighted edge table is hash-partitioned by src once and
     # each relaxation round shuffles only the iterate.
-    fp = ("trade_sssp",
-          data_fingerprint(sf_dir, "orders", "lineitem") or sf_dir)
+    fp = ("trade_sssp", data_fingerprint(sf_dir, "orders", "lineitem"))
     e, hint = iterate_join_strategy(
         spark, e, "src", vertex_count(spark, e, "src", fp), fp)
 

@@ -16,7 +16,7 @@ tie-break, so both engines pick the same top-20.
 Scale stance (100 TB):
 - PPR: per iteration ONE co-partitioned equi-join (edges ⋈ ranks on
   src) + one combinable groupBy(dst) — identical layout to
-  pagerank_trade_graph; the edge table comes from graphrank._EDGE_CACHE
+  pagerank_trade_graph; the edge table comes from graphrank._edges_with_deg
   (built once per dataset). Seed discovery is one combinable aggregate
   + a bounded top-5 collect.
 - Link prediction: candidate pairs enumerate as WEDGES (edge ⋈ edge on

@@ -29,34 +29,21 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..dataset_cache import data_fingerprint
+from ..cache import cached, data_fingerprint
 from ..registry import register
 from ..tables import load_table
-
-# (applicationId, lineitem fingerprint) -> (oriented edges eo(src,dst,dd),
-# degrees deg(node,d), n_edges). The co-purchase graph depends only on the
-# dataset, and THREE query families rebuild it per call (clustering
-# coefficients, edge triangle support, the bench triangle-scaling probes) —
-# round 12's persist() leak provided this reuse by accident (and columnar-
-# cached reads on top), round 13's leak-free per-call localCheckpoint
-# re-materialized every run (the measured ~1.5x same-box regression, A/B
-# in COVERAGE.md r14). A keyed singleton cache is the deliberate version:
-# ONE checkpointed edge table per dataset, bounded (clear-then-insert),
-# RDD-block-backed (no CacheManager entry — the leak regression test still
-# holds). Identical to graphrank._EDGE_CACHE.
-_CO_EDGE_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame, int]] = {}
 
 
 def copurchase_oriented_edges(
         spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, int]:
     """Degree-ordered oriented edge list of the part co-purchase graph
     (src, dst, dd=dst degree), per-node degrees (node, d), and the edge
-    count — localCheckpointed and memoized per (application, dataset).
-    Data fingerprint in the key: rewriting the parquet under sf_dir within
-    one application (bench tmp-dir scaling demos) must be a cache MISS."""
-    key = (spark.sparkContext.applicationId,
-           data_fingerprint(sf_dir, "lineitem") or sf_dir)
-    if key not in _CO_EDGE_CACHE:
+    count — localCheckpointed and memoized per dataset (cache.py). THREE
+    query families build this graph (clustering coefficients, edge
+    triangle support, the bench triangle-scaling probes); the per-call
+    checkpoint re-materialized it every run (the measured ~1.5x, A/B in
+    COVERAGE.md r14)."""
+    def build() -> tuple[DataFrame, DataFrame, int]:
         li = load_table(spark, sf_dir, "lineitem")
         op = li.select(F.col("l_orderkey").alias("o"),
                        F.col("l_partkey").alias("p")).distinct()
@@ -89,10 +76,10 @@ def copurchase_oriented_edges(
                 .unionAll(eo.select(F.col("dst").alias("node")))
                 .groupBy("node").agg(F.count(F.lit(1)).alias("d"))
                 ).localCheckpoint(eager=True)
-        n_edges = eo.count()
-        _CO_EDGE_CACHE.clear()
-        _CO_EDGE_CACHE[key] = (eo, degc, n_edges)
-    return _CO_EDGE_CACHE[key]
+        return eo, degc, eo.count()
+
+    return cached(spark, ("copurchase_oriented",
+                          data_fingerprint(sf_dir, "lineitem")), build)
 
 _CC_ORACLE = """
 WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),

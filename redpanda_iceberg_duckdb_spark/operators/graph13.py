@@ -63,7 +63,7 @@ def edge_triangle_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph (module docstring): (support, n_edges), support-0 edges
     included. Cites graph12.clustering_coefficient_parts for the shared
     orientation discipline."""
-    # Shared keyed-singleton edge cache (graph12.copurchase_oriented_edges):
+    # Shared cached edge table (graph12.copurchase_oriented_edges):
     # eo feeds the wedge join twice, the closing lookup, and the final
     # support join — and is reused across the whole triangle family.
     eo, _deg, n_edges = copurchase_oriented_edges(spark, sf_dir)

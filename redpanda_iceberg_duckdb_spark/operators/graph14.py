@@ -66,10 +66,8 @@ def double_sweep_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(landmark, ecc_landmark, far_node, diameter_lb, n_reached):
     hop-capped double-sweep BFS diameter lower bound (module
     docstring)."""
-    from ..dataset_cache import data_fingerprint
     from ..session import iterate_partitions, pinned_shuffle_partitions
-    from .graph10d import copurchase_edges, copurchase_vertex_count
-    from .graph_iterate import iterate_join_strategy
+    from .graph10d import copurchase_join_strategy
 
     # r16 (verdict item 2): the r15 broadcast hints (frontier/visited are
     # O(V) iterates behind stat-less checkpointed RDDs — without a hint
@@ -78,11 +76,7 @@ def double_sweep_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table is hash-partitioned by src once (pay-once layout, guide §2.4
     # — the pre-bucketing fallback r15 only promised in this comment) and
     # each hop shuffles only the iterate side.
-    edges, hint = iterate_join_strategy(
-        spark, copurchase_edges(spark, sf_dir), "src",
-        copurchase_vertex_count(spark, sf_dir),
-        ("copurchase", data_fingerprint(sf_dir, "orders", "lineitem")
-         or sf_dir))
+    edges, hint = copurchase_join_strategy(spark, sf_dir)
 
     def bfs(source_df: DataFrame) -> DataFrame:
         dist = source_df.select("c", F.lit(0).alias("d"))

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..registry import register
-from .graph10d import _edges_sql, copurchase_edges
+from .graph10d import _edges_sql, copurchase_join_strategy
 
 _HOPS = 6
 
@@ -97,20 +97,13 @@ def shortest_path_dag_sigma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(level, n_nodes, sigma_total, sigma_max, argmax_node): exact
     shortest-path counts per BFS level from the min-id landmark, 6-hop
     cap (module docstring)."""
-    from ..dataset_cache import data_fingerprint
     from ..session import iterate_partitions, pinned_shuffle_partitions
-    from .graph10d import copurchase_vertex_count
-    from .graph_iterate import iterate_join_strategy
 
     # r16 (verdict item 2): level/settled broadcast hints gated on the
     # measured vertex count; above the gate the edge table is
     # hash-partitioned by src once and only the O(V) iterate shuffles
     # per level (graph_iterate module docstring).
-    edges, hint = iterate_join_strategy(
-        spark, copurchase_edges(spark, sf_dir), "src",
-        copurchase_vertex_count(spark, sf_dir),
-        ("copurchase", data_fingerprint(sf_dir, "orders", "lineitem")
-         or sf_dir))
+    edges, hint = copurchase_join_strategy(spark, sf_dir)
     lm = edges.agg(F.min("src").alias("node")).select(
         "node", F.lit(1).cast("long").alias("sig"))
     # r15 optimization (guide §2.2): per-level frames are O(V) iterates;

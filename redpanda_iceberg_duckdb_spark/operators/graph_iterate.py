@@ -32,11 +32,9 @@ force either path); the 4M default keeps a (long, long) iterate around
 budget, far below executor budgets on a real cluster, and above every
 local-SF vertex count so the driver's bench exercises the broadcast path.
 
-Vertex counts (plain ints, capped dict) and above-gate partitioned edge
-tables (clear-then-insert single live entry, the graph10d._EDGE_CACHE
-convention — the evicted frame is unpersisted) are memoized per
-(applicationId, caller cache key); dataset-fingerprint keyed by the
-caller, never persisted across runs.
+Vertex counts and above-gate partitioned edge tables are memoized in the
+package cache (cache.py) under the caller's dataset-fingerprinted key;
+an evicted layout's checkpoint is released there.
 """
 
 from __future__ import annotations
@@ -46,12 +44,9 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-_DEFAULT_BOUND = 4_000_000
+from ..cache import cached
 
-# (applicationId, cache_key) -> vertex count
-_VCOUNT_CACHE: dict[tuple, int] = {}
-# single live entry: {"key": (...), "df": persisted partitioned edges}
-_PART_CACHE: dict[str, object] = {}
+_DEFAULT_BOUND = 4_000_000
 
 
 def broadcast_iterate_bound() -> int:
@@ -66,13 +61,8 @@ def vertex_count(spark: SparkSession, edges: DataFrame, key: str,
     """Distinct ``key`` count of the (symmetric) edge table — the iterate
     row bound — memoized per (application, caller key) so the one count
     job is paid once per dataset across every query sharing the graph."""
-    ck = (spark.sparkContext.applicationId, cache_key)
-    if ck not in _VCOUNT_CACHE:
-        n = edges.select(key).distinct().count()
-        if len(_VCOUNT_CACHE) >= 64:   # ints only — a loose cap suffices
-            _VCOUNT_CACHE.clear()
-        _VCOUNT_CACHE[ck] = n
-    return _VCOUNT_CACHE[ck]
+    return cached(spark, ("vertex_count", cache_key, key),
+                  lambda: edges.select(key).distinct().count())
 
 
 def _identity(df: DataFrame) -> DataFrame:
@@ -96,8 +86,8 @@ def iterate_join_strategy(
     """
     if n_iterate <= broadcast_iterate_bound():
         return edges, F.broadcast
-    ck = (spark.sparkContext.applicationId, cache_key, key)
-    if _PART_CACHE.get("key") != ck:
+
+    def build() -> DataFrame:
         width = int(spark.conf.get("spark.sql.shuffle.partitions"))
         # Build the layout with AQE scoped OFF: an AQE-planned repartition
         # materializes through an AdaptiveSparkPlan whose output
@@ -113,10 +103,9 @@ def iterate_join_strategy(
         if prior != "false":
             spark.conf.set(aqe_key, "false")
         try:
-            part = edges.repartition(width, key).localCheckpoint(eager=True)
+            return edges.repartition(width, key).localCheckpoint(eager=True)
         finally:
             if prior != "false":
                 spark.conf.set(aqe_key, prior)
-        _PART_CACHE["key"] = ck
-        _PART_CACHE["df"] = part   # old entry dropped -> RDD GC'd
-    return _PART_CACHE["df"], _identity
+
+    return cached(spark, ("partitioned", cache_key, key), build), _identity

@@ -44,8 +44,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from ..cache import cached, data_fingerprint
 from ..registry import register
-from ..dataset_cache import data_fingerprint
 from ..tables import load_table
 from .pq11 import _DSUB, _K, _M, _NQ_MAX, _NQ_MOD, _SCALE
 
@@ -95,10 +95,6 @@ cb2 AS (SELECT f.code, f.sub, f.sub * {_DSUB} + q.kk AS k,
                sum(q.qv) AS s, count(*) AS n
         FROM fin2 f JOIN qd2 q ON q.vec_id = f.vec_id AND q.sub = f.sub
         GROUP BY 1, 2, 3)"""
-
-# (applicationId, data fingerprint) -> (stats list, n_rounds); stats rows
-# are (sub, code, n, s[_DSUB]) sorted. Bounded: clear-then-insert.
-_PQ_TRAIN_CACHE: dict[tuple[str, str], tuple[list, int]] = {}
 
 # Training sets at or below this vector count run Lloyd driver-side after a
 # single collect (<=32 MB of int64 at 64 dims) — the FAISS-style bounded
@@ -164,12 +160,13 @@ def _train_driver_side(qs, lbl) -> tuple[list, int] | None:
 def train_pq_stats(spark: SparkSession, sf_dir: str) -> tuple[list, int]:
     """Joint per-subspace Lloyd from the shipped labels until zero
     (vector, subspace) points move. Returns (sorted stats rows
-    (sub, code, n, s_arr), joint round count); memoized per
-    (application, dataset)."""
-    key = (spark.sparkContext.applicationId,
-           data_fingerprint(sf_dir, "embeddings") or sf_dir)
-    if key in _PQ_TRAIN_CACHE:
-        return _PQ_TRAIN_CACHE[key]
+    (sub, code, n, s_arr), joint round count); memoized per dataset
+    (cache.py)."""
+    return cached(spark, ("pq_train", data_fingerprint(sf_dir, "embeddings")),
+                  lambda: _train_pq_stats(spark, sf_dir))
+
+
+def _train_pq_stats(spark: SparkSession, sf_dir: str) -> tuple[list, int]:
     raw = load_table(spark, sf_dir, "embeddings")
     base = raw.select("vec_id",
                       F.col("label").cast("int").alias("lbl0"),
@@ -187,8 +184,6 @@ def train_pq_stats(spark: SparkSession, sf_dir: str) -> tuple[list, int]:
         res = _train_driver_side(qs, pdf["lbl0"].to_numpy()
                                  .astype(np.int64))
         if res is not None:
-            _PQ_TRAIN_CACHE.clear()
-            _PQ_TRAIN_CACHE[key] = res
             return res
     n_parts = max(2, int(spark.conf.get("spark.sql.shuffle.partitions",
                                         "32")) // 4)
@@ -373,8 +368,6 @@ def train_pq_stats(spark: SparkSession, sf_dir: str) -> tuple[list, int]:
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", sp_saved)
     final = [(sub, code, n, s) for sub, code, n, _, s in stats5]
-    _PQ_TRAIN_CACHE.clear()
-    _PQ_TRAIN_CACHE[key] = (final, n_rounds)
     return final, n_rounds
 
 

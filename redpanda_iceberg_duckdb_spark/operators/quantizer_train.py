@@ -33,8 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..cache import cached, data_fingerprint
 from ..registry import register
-from ..dataset_cache import data_fingerprint
 from ..tables import load_table
 from .similarity import (_NORMS_DUCK, _SCALE, _bcast_query_dots, _norms,
                          _ranked_topk, _sims_from_dots, dot_int64)
@@ -79,30 +79,22 @@ it AS (
 fin AS (SELECT vec_id, lbl FROM it WHERE t = (SELECT max(t) FROM it))"""
 
 
-# (applicationId, sf_dir) -> (checkpointed assignment, round count).
-# ann_recall_retrained re-runs the SAME converged training that
-# kmeans_train_converged just executed (13-30 driver-synchronized rounds);
-# in the driver's sequential correctness run that doubled the most
-# expensive iterative job in the batch (round-8 advice). The cached
-# assignment is a localCheckpoint (lineage-free, ~6k tiny rows) whose
-# blocks stay valid for the life of the Spark application — keying on
-# applicationId drops entries from dead sessions.
-_TRAIN_CACHE: dict[tuple[str, str], tuple[DataFrame, int]] = {}
-
-
 def train_assignments(spark: SparkSession, sf_dir: str
                       ) -> tuple[DataFrame, int]:
     """Lloyd iterations from the shipped ``label`` column until zero
     vectors move. Returns (final (vec_id, lbl) assignment — persisted via
     localCheckpoint, lineage-free — and the round count). Memoized per
-    (application, sf_dir): see _TRAIN_CACHE."""
-    # Data fingerprint in the key: a rewrite of embeddings.parquet within
-    # one application must miss the cache, not serve stale assignments
-    # (round-9 advice; same fix as graphrank._EDGE_CACHE).
-    key = (spark.sparkContext.applicationId,
-           data_fingerprint(sf_dir, "embeddings") or sf_dir)
-    if key in _TRAIN_CACHE:
-        return _TRAIN_CACHE[key]
+    dataset (cache.py): ann_recall_retrained re-runs the SAME converged
+    training that kmeans_train_converged just executed (13-30
+    driver-synchronized rounds), which doubled the most expensive
+    iterative job of a sequential correctness run (round-8 advice)."""
+    return cached(spark, ("kmeans_train",
+                          data_fingerprint(sf_dir, "embeddings")),
+                  lambda: _train_assignments(spark, sf_dir))
+
+
+def _train_assignments(spark: SparkSession, sf_dir: str
+                       ) -> tuple[DataFrame, int]:
     emb = (load_table(spark, sf_dir, "embeddings")
            .select("vec_id", "embedding",
                    F.col("label").cast("int").alias("lbl0"),
@@ -299,8 +291,6 @@ def train_assignments(spark: SparkSession, sf_dir: str
            .select("vec_id",
                    F.expr(_argmin(prev_cells, "C_new_")).alias("lbl"))
            .localCheckpoint(eager=True))
-    _TRAIN_CACHE.clear()   # at most one live entry — bounded memory
-    _TRAIN_CACHE[key] = (fin, n_rounds)
     return fin, n_rounds
 
 

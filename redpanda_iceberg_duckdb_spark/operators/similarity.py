@@ -25,47 +25,29 @@ Scale design (100 TB stance):
 from __future__ import annotations
 
 import hashlib
-from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from ..cache import cached
 from ..registry import register
 from ..tables import load_table
 
 _SCALE = "1e12"
 
-# (applicationId, content-md5) -> SparkContext broadcast of a collected
-# query block. r15 ADVICE: _bcast_query_dots created a fresh broadcast per
-# invocation and never unpersisted it, so bench loops and the trained
-# variants (which rebuild plans repeatedly) accumulated broadcast blocks
-# for the session lifetime. Content-keyed LRU, evicted entries unpersisted
-# — repeated calls on the same dataset now reuse ONE broadcast.
-_QBLOCK_CACHE: OrderedDict[tuple, object] = OrderedDict()
-_QBLOCK_CAP = 8
-
 
 def _query_block_broadcast(spark: SparkSession,
                            qids: list[int], qvecs: list[list[float]]):
-    key = (spark.sparkContext.applicationId,
-           hashlib.md5(np.asarray(qids, dtype=np.int64).tobytes()
-                       + np.asarray(qvecs, dtype=np.float64).tobytes())
-           .hexdigest())
-    bc = _QBLOCK_CACHE.get(key)
-    if bc is None:
-        bc = spark.sparkContext.broadcast((qids, qvecs))
-        _QBLOCK_CACHE[key] = bc
-        while len(_QBLOCK_CACHE) > _QBLOCK_CAP:
-            _, old = _QBLOCK_CACHE.popitem(last=False)
-            try:
-                old.unpersist()
-            except Exception:   # pragma: no cover — already-stopped context
-                pass
-    else:
-        _QBLOCK_CACHE.move_to_end(key)
-    return bc
+    """SparkContext broadcast of a collected query block, cached by
+    content: repeated calls on the same dataset reuse ONE broadcast, and
+    the cache unpersists it on eviction."""
+    digest = hashlib.md5(np.asarray(qids, dtype=np.int64).tobytes()
+                         + np.asarray(qvecs, dtype=np.float64).tobytes())
+    return cached(spark, ("query_block", digest.hexdigest()),
+                  lambda: spark.sparkContext.broadcast((qids, qvecs)))
+
 
 # int64-scaled dot: floor(x*y*1e12) summed — order-independent, exact.
 _DOT_INT_SPARK = (
@@ -110,7 +92,8 @@ def _ranked_topk(sims: DataFrame, k: int) -> DataFrame:
             .filter(F.col("rank") <= k))
 
 
-def _bcast_query_dots(q: DataFrame, cand: DataFrame) -> DataFrame:
+def _bcast_query_dots(q: DataFrame, cand: DataFrame, cid: str = "cid",
+                      ce: str = "ce") -> DataFrame:
     """Scaled int64 dot of EVERY candidate against EVERY query: ONE
     mapInPandas pass over the candidate scan with the query block riding
     a broadcast variable — the cosine_topk_bruteforce r15 shape, factored
@@ -120,7 +103,9 @@ def _bcast_query_dots(q: DataFrame, cand: DataFrame) -> DataFrame:
     ``q`` is the gate-bounded probe frame (qid, qe): <=64 rows at the
     %100/<6400 sites, <=320 at the %20 site, AT ANY CORPUS SIZE, so the
     collect is a bounded-scalar read (the offsets convention). ``cand``
-    carries (cid, ce). This replaces the broadcast nested-loop pair
+    carries the candidate id and embedding in columns ``cid`` and ``ce``
+    (cosine_topk_bruteforce passes the raw scan's names, so no renaming
+    projection sits under the Python boundary). This replaces the broadcast nested-loop pair
     expansion that shipped BOTH embeddings of every (query, candidate)
     pair through Arrow (the retired _numpy_pair_dots shape): each
     candidate embedding now crosses the Python boundary exactly once
@@ -158,8 +143,8 @@ def _bcast_query_dots(q: DataFrame, cand: DataFrame) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0 or len(qid_arr) == 0:
                 continue
-            cmat = np.array(list(pdf["ce"]), dtype=np.float64)
-            cids = pdf["cid"].to_numpy()
+            cmat = np.array(list(pdf[ce]), dtype=np.float64)
+            cids = pdf[cid].to_numpy()
             for j in range(len(qid_arr)):
                 dots = (np.floor(cmat * qm[j] * 1e12)
                         .astype(np.int64).sum(axis=1))
@@ -170,7 +155,7 @@ def _bcast_query_dots(q: DataFrame, cand: DataFrame) -> DataFrame:
                     "cid": cids[mask],
                     "dot": dots[mask].astype(np.float64)})
 
-    return cand.select("cid", "ce").mapInPandas(
+    return cand.select(cid, ce).mapInPandas(
         compute, schema="qid long, cid long, dot double")
 
 
@@ -228,37 +213,11 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan. Same exact int64-lattice math (floor(x*y*1e12) row-sums).
     Measured: 1.08 -> 0.52 s warm at sf0.1."""
     emb = load_table(spark, sf_dir, "embeddings")
-    norms = _norms(emb)
-    qrows = (emb.filter((F.col("vec_id") % 100 == 0)
-                        & (F.col("vec_id") < 6400))
-             .select("vec_id", "embedding").collect())  # <= 64 rows, gated
-    qids = [int(r["vec_id"]) for r in qrows]
-    qvecs = [list(r["embedding"]) for r in qrows]
-    # cached broadcast + per-query yield: the r15 ADVICE fixes applied to
-    # this inline twin of _bcast_query_dots (see its docstring).
-    bc = _query_block_broadcast(spark, qids, qvecs)
-
-    def compute(batches):
-        qid_arr = np.array(bc.value[0], dtype=np.int64)
-        qm = np.array(bc.value[1], dtype=np.float64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cmat = np.array(list(pdf["embedding"]), dtype=np.float64)
-            cids = pdf["vec_id"].to_numpy()
-            for j in range(len(qid_arr)):
-                dots = (np.floor(cmat * qm[j] * 1e12)
-                        .astype(np.int64).sum(axis=1))
-                mask = cids != qid_arr[j]
-                yield pd.DataFrame({
-                    "qid": np.full(int(mask.sum()), qid_arr[j],
-                                   dtype=np.int64),
-                    "cid": cids[mask],
-                    "dot": dots[mask].astype(np.float64)})
-
-    dots = emb.select("vec_id", "embedding").mapInPandas(
-        compute, schema="qid long, cid long, dot double")
-    return _ranked_topk(_sims_from_dots(dots, norms), 10).orderBy("qid", "rank")
+    q = (emb.filter((F.col("vec_id") % 100 == 0) & (F.col("vec_id") < 6400))
+         .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")))
+    dots = _bcast_query_dots(q, emb, cid="vec_id", ce="embedding")
+    return (_ranked_topk(_sims_from_dots(dots, _norms(emb)), 10)
+            .orderBy("qid", "rank"))
 
 
 @register(

@@ -34,9 +34,8 @@ import json
 import os
 
 _PKG = "redpanda_iceberg_duckdb_spark"
-_MANIFEST_PATH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "verification_manifest.json")
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_MANIFEST_PATH = os.path.join(_REPO_ROOT, "verification_manifest.json")
 
 
 def _module_source(modname: str) -> str | None:
@@ -85,13 +84,15 @@ def _dep_modules(modname: str, src: str) -> list[str]:
 
 def query_sha(q) -> str:
     """Fingerprint of a registered Query: defining-module source, one level
-    of intra-package imported-module sources, and the oracle SQL."""
+    of intra-package imported-module sources, and the oracle SQL with the
+    checkout's root replaced by a fixed token (an oracle that reads a
+    committed fixture by absolute path hashes the same in any checkout)."""
     mod = inspect.getmodule(q.fn)
     src = inspect.getsource(mod)
     h = hashlib.sha256()
     h.update(src.encode())
     h.update(b"\x00")
-    h.update((q.oracle or "").encode())
+    h.update((q.oracle or "").replace(_REPO_ROOT, "<repo>").encode())
     for cand in _dep_modules(mod.__name__, src):
         dep = _module_source(cand)
         if dep is not None:

@@ -101,6 +101,23 @@ def test_bench_emits_single_json_line(tmp_path):
     assert isinstance(side["extras"], dict) and side["extras"]
 
 
+def test_bench_cache_demos_smoke(spark, sf_smoke):
+    """The bench extras path runs only in the driver's full bench (the
+    stdout-contract test above skips it). Smoke the two demos that go
+    through the dataset cache at sf0.001 and check their keys."""
+    import bench
+
+    tri = bench.triangle_scaling_demo(spark, sf_smoke)
+    assert set(tri) == {"triangles_x1_cold", "triangles_x1",
+                        "triangles_x2_cold", "triangles_x2"}
+    bpe = bench.bpe_wordcount_demo(spark, sf_smoke)
+    assert set(bpe) == {"bpe_x3dup_bpe_train_merges",
+                        "bpe_x3dup_bpe_train_merges_wordcount",
+                        "bpe_encode_stats_x1", "bpe_encode_stats_x3"}
+    assert all(isinstance(v, float) and v >= 0
+               for v in {**tri, **bpe}.values())
+
+
 def _load_greens() -> dict[str, set[str]]:
     """round tag -> set of query names with a green CORRECTNESS row."""
     import json

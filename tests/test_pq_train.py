@@ -45,12 +45,9 @@ def test_driver_and_distributed_training_paths_agree(spark, monkeypatch):
     from redpanda_iceberg_duckdb_spark.operators import pq_train as P
 
     sf = "/root/testdata/sf0.001"
-    P._PQ_TRAIN_CACHE.clear()
-    driver_stats, driver_rounds = P.train_pq_stats(spark, sf)
-    P._PQ_TRAIN_CACHE.clear()
+    driver_stats, driver_rounds = P._train_pq_stats(spark, sf)
     monkeypatch.setattr(P, "_DRIVER_TRAIN_BOUND", 0)
-    dist_stats, dist_rounds = P.train_pq_stats(spark, sf)
-    P._PQ_TRAIN_CACHE.clear()
+    dist_stats, dist_rounds = P._train_pq_stats(spark, sf)
     assert driver_rounds == dist_rounds
     assert [(s, c, n, list(a)) for s, c, n, a in driver_stats] == \
            [(s, c, n, list(a)) for s, c, n, a in dist_stats]

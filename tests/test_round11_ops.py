@@ -1,7 +1,7 @@
 """Round-11 operator tests.
 
 Covers the round-10 ADVICE closures (Theil-Sen thinning-parity, ANOVA
-exact lattice, dataset_cache fingerprints) and the round-11 additions.
+exact lattice, cache.py data fingerprints) and the round-11 additions.
 """
 
 from __future__ import annotations

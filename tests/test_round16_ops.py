@@ -58,9 +58,6 @@ def test_iterate_join_strategy_plan_shapes(spark):
     # edge partitioning (formatted explain lists each node twice — count
     # node headers, not substrings)
     assert _node_headers(p2, "Exchange") == 1, p2[:1500]
-    # cleanup: drop the single live cached layout (checkpoint RDD is GC'd)
-    graph_iterate._PART_CACHE.pop("df", None)
-    graph_iterate._PART_CACHE.pop("key", None)
 
 
 _GATED = ["bfs_hop_distance", "kcore_degree_histogram",
@@ -81,8 +78,6 @@ def test_gated_graph_loops_both_paths_agree(spark, sf_smoke, name,
         fallback = sorted(map(tuple, q.fn(spark, sf_smoke).collect()))
     finally:
         monkeypatch.delenv(_BOUND_ENV, raising=False)
-        graph_iterate._PART_CACHE.pop("df", None)
-        graph_iterate._PART_CACHE.pop("key", None)
     assert bcast == fallback, name
 
 

@@ -36,6 +36,7 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as m
+    from redpanda_iceberg_duckdb_spark import cache
     from redpanda_iceberg_duckdb_spark.session import get_spark
 
     spark = get_spark("oracle_sim")
@@ -85,7 +86,8 @@ def main() -> int:
     if args.out:
         with open(args.out, "w") as f:
             json.dump(results, f, indent=1, sort_keys=True)
-    print(json.dumps({"n": len(results), "fail": n_fail}))
+    print(json.dumps({"n": len(results), "fail": n_fail,
+                      "cache": cache.stats()}))
     spark.stop()
     return 1 if n_fail else 0
 
