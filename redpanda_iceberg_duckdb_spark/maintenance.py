@@ -22,6 +22,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+TARGET_FILE_BYTES = 128 * 1024 * 1024
+
 
 def dataset_file_stats(path: str) -> tuple[int, int]:
     """(n_files, total_bytes) of a parquet dataset directory (recursive)."""
@@ -30,7 +32,7 @@ def dataset_file_stats(path: str) -> tuple[int, int]:
 
 
 def compact_small_files(spark: SparkSession, path: str, out_path: str, *,
-                        target_file_bytes: int = 128 * 1024 * 1024) -> int:
+                        target_file_bytes: int = TARGET_FILE_BYTES) -> int:
     """Rewrite ``path`` into ``out_path`` with ~target-sized files.
     Returns the output file count. Uses the measured input size, not row
     counts — file sizing is a byte problem."""
@@ -55,21 +57,18 @@ def expire_snapshots(base: str, *, keep: int = 2) -> list[str]:
     """Retention for merge_sink snapshot versions: drop all but the newest
     ``keep`` version directories (never the one the pointer names). The
     plain-parquet analogue of Iceberg's expire_snapshots."""
-    import re
     import shutil
 
-    from .streaming.merge_sink import current_snapshot_path
+    from .streaming import snapshots
 
     if keep < 0:
         raise ValueError(f"keep must be >= 0, got {keep}")
-    current = current_snapshot_path(base)
-    versions = sorted(
-        (d for d in glob.glob(os.path.join(base, "v*"))
-         if re.fullmatch(r"v\d+", os.path.basename(d))),
-        key=lambda d: int(os.path.basename(d)[1:]))
-    # versions[:-keep] with keep=0 is the EMPTY slice — the opposite of
+    current = snapshots.current_version(base)
+    found = snapshots.versions(base)
+    # found[:-keep] with keep=0 is the EMPTY slice — the opposite of
     # "keep none but current" — so compute the cut explicitly.
-    victims = [d for d in versions[:len(versions) - keep] if d != current]
+    victims = [snapshots.table_path(base, v)
+               for v in found[:len(found) - keep] if v != current]
     for d in victims:
         shutil.rmtree(d)
     return victims
@@ -89,10 +88,11 @@ def apply_deletions(spark: SparkSession, data_path: str, out_path: str, *,
     streaming/merge_sink's pointer flip."""
     df = spark.read.parquet(data_path)
     before = df.count()
-    keys = tombstones.select(F.col(key_col)).distinct()
+    # No distinct(): a duplicated key cannot change a left-anti result.
+    keys = tombstones.select(F.col(key_col))
     kept = df.join(F.broadcast(keys), key_col, "left_anti")
     kept.write.mode("overwrite").parquet(out_path)
-    after = spark.read.parquet(out_path).count()
+    after = spark.read.schema(kept.schema).parquet(out_path).count()
     return before, after
 
 

@@ -48,9 +48,10 @@ def upsert(snapshot: DataFrame, changes: DataFrame, key_cols: list[str]
            ) -> DataFrame:
     """MERGE INTO emulation: rows in ``changes`` replace same-key rows in
     ``snapshot``; unmatched snapshot rows pass through (changes ∪
-    snapshot⟕anti changes). Columns must align."""
-    keep = snapshot.join(changes.select(*key_cols).distinct(),
-                         key_cols, "left_anti")
+    snapshot⟕anti changes). Columns must align. The key side is not
+    deduplicated: a repeated key cannot change a left-anti result, and a
+    distinct() would cost an aggregate and a shuffle."""
+    keep = snapshot.join(changes.select(*key_cols), key_cols, "left_anti")
     return keep.unionByName(changes)
 
 

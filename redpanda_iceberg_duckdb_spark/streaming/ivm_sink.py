@@ -30,8 +30,8 @@ maintained view is BIT-EQUAL to a from-scratch recompute after every batch.
 Scale stance (100 TB): the two delta joins broadcast the delta side (a
 day's orders/lines vs years of state) — the big state tables are scanned
 map-side, never shuffled, and ΔL is pre-aggregated to order granularity
-BEFORE touching any state. The per-batch state rewrite here (snapshot
-parquet + pointer flip, the merge_sink.py poor-man's-Iceberg commit) is
+BEFORE touching any state. The per-batch state rewrite here (a versioned
+snapshot with recorded schemas and a pointer flip, streaming/snapshots.py) is
 where a lakehouse would run MERGE INTO on a bucketed state table, touching
 only the buckets the delta keys hash to; the view compaction shuffles only
 customer-cardinality rows. Nothing in the cycle rescans the fact corpus.
@@ -45,6 +45,8 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from . import snapshots
+
 # One decimal type for every money column in the state: unions stay
 # type-stable across batches and sums stay exact (line revenue carries 4
 # fractional digits; magnitudes are nowhere near 26 integer digits).
@@ -55,8 +57,6 @@ _DEC = "decimal(30,4)"
 # carry per-line revenue).
 CHANGELOG_SCHEMA = ("kind string, orderkey bigint, custkey bigint, "
                     f"rev {_DEC}")
-
-_POINTER = "_CURRENT"
 
 
 class IvmState(NamedTuple):
@@ -116,33 +116,13 @@ def apply_delta(state: IvmState, d_orders: DataFrame,
 
 # ---------------------------------------------------------------- sink I/O
 
-def _current_version(base: str) -> int | None:
-    ptr = os.path.join(base, _POINTER)
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as f:
-        return int(f.read().strip()[1:])
-
-
 def read_state(spark: SparkSession, base: str) -> IvmState:
-    v = _current_version(base)
+    # One pointer read: the three tables must come from the same version.
+    v = snapshots.current_version(base)
     if v is None:
         return empty_state(spark)
-    d = os.path.join(base, f"v{v}")
-    return IvmState(spark.read.parquet(os.path.join(d, "view")),
-                    spark.read.parquet(os.path.join(d, "orders")),
-                    spark.read.parquet(os.path.join(d, "lines")))
-
-
-def _write_state(state: IvmState, base: str, version: int) -> None:
-    d = os.path.join(base, f"v{version}")
-    state.view.write.mode("overwrite").parquet(os.path.join(d, "view"))
-    state.orders.write.mode("overwrite").parquet(os.path.join(d, "orders"))
-    state.lines.write.mode("overwrite").parquet(os.path.join(d, "lines"))
-    tmp = os.path.join(base, _POINTER + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(f"v{version}")
-    os.replace(tmp, os.path.join(base, _POINTER))  # atomic pointer flip
+    return IvmState(*(snapshots.read(spark, base, t, v)
+                      for t in IvmState._fields))
 
 
 def ivm_batch(batch: DataFrame, epoch_id: int, *, base: str) -> bool:
@@ -152,8 +132,7 @@ def ivm_batch(batch: DataFrame, epoch_id: int, *, base: str) -> bool:
     re-applying a delta would DOUBLE-COUNT it, so unlike the idempotent
     merge sink this guard is load-bearing for correctness, not just I/O."""
     version = epoch_id + 1
-    committed = _current_version(base)
-    if committed is not None and committed >= version:
+    if snapshots.is_committed(base, version):
         return False
     spark = batch.sparkSession
     state = read_state(spark, base)
@@ -162,7 +141,8 @@ def ivm_batch(batch: DataFrame, epoch_id: int, *, base: str) -> bool:
                         F.col("custkey").alias("o_custkey")))
     d_lines = (batch.filter(F.col("kind") == "line")
                .select(F.col("orderkey").alias("l_orderkey"), "rev"))
-    _write_state(apply_delta(state, d_orders, d_lines), base, version)
+    snapshots.commit(base, version,
+                     apply_delta(state, d_orders, d_lines)._asdict())
     return True
 
 

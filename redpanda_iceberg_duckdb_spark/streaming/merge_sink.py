@@ -5,9 +5,18 @@ MERGE INTO (Iceberg/Delta) expressed on plain parquet.
 Exactly-once story: foreachBatch can re-run a batch after failure, so the
 sink must be idempotent. Upsert by key IS idempotent (re-applying the same
 changes yields the same snapshot), which is why this pattern is safe where
-blind appends are not. Each batch writes a new snapshot version directory
-and flips a pointer file last — the poor-man's atomic commit (Iceberg's
-metadata swap, one level down).
+blind appends are not. Each batch commits a new snapshot version through
+``snapshots`` (data + recorded schema, pointer flipped last — Iceberg's
+metadata swap, one level down), so reading the snapshot back runs no
+schema-inference job.
+
+When the planner knows the batch's size (a file-backed micro-batch, for
+instance), one batch is two Spark jobs: the broadcast of the change keys
+for the anti-join and the write. The write is coalesced to the optimizer's
+size estimate over ``maintenance.TARGET_FILE_BYTES`` (the compaction
+target), so a small keyed snapshot is one file per version, not one per
+input partition; a batch of unknown size estimates as unbounded and keeps
+its partitioning.
 """
 
 from __future__ import annotations
@@ -17,34 +26,28 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from . import snapshots
+from ..maintenance import TARGET_FILE_BYTES
 from ..operators.cdc import upsert
 
-_POINTER = "_CURRENT"
+# coalesce() takes a JVM int; a plan over an RDD or with a Window estimates
+# its size far above that range.
+_MAX_FILES = 2**31 - 1
 
 
 def current_snapshot_path(base: str) -> str | None:
-    ptr = os.path.join(base, _POINTER)
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as f:
-        return os.path.join(base, f.read().strip())
+    v = snapshots.current_version(base)
+    return None if v is None else snapshots.table_path(base, v)
 
 
 def read_snapshot(spark: SparkSession, base: str) -> DataFrame | None:
-    path = current_snapshot_path(base)
-    return spark.read.parquet(path) if path else None
+    return snapshots.read(spark, base)
 
 
-def _commit(base: str, version: int) -> None:
-    tmp = os.path.join(base, _POINTER + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(f"v{version}")
-    os.replace(tmp, os.path.join(base, _POINTER))  # atomic pointer flip
-
-
-def _pointer_version(base: str) -> int | None:
-    path = current_snapshot_path(base)
-    return int(os.path.basename(path)[1:]) if path else None
+def _file_count(df: DataFrame) -> int:
+    """ceil(optimizer size estimate / TARGET_FILE_BYTES), at least 1."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return min(max(1, -(-size // TARGET_FILE_BYTES)), _MAX_FILES)
 
 
 def merge_batch(batch: DataFrame, epoch_id: int, *, base: str,
@@ -60,8 +63,7 @@ def merge_batch(batch: DataFrame, epoch_id: int, *, base: str,
     # crash — writing again would overwrite the directory the pointer (and
     # any concurrent reader) points at. Skip: upsert is idempotent, and the
     # committed snapshot already contains this batch.
-    committed = _pointer_version(base)
-    if committed is not None and committed >= version:
+    if snapshots.is_committed(base, version):
         return False
     if seq_col is not None:
         # Last change per key wins WITHIN the batch — without this, a batch
@@ -73,9 +75,7 @@ def merge_batch(batch: DataFrame, epoch_id: int, *, base: str,
     # directory we are about to overwrite.
     snap = read_snapshot(spark, base)
     merged = upsert(snap, batch, key_cols) if snap is not None else batch
-    out = os.path.join(base, f"v{version}")
-    merged.write.mode("overwrite").parquet(out)
-    _commit(base, version)
+    snapshots.commit(base, version, {"": merged.coalesce(_file_count(merged))})
     return True
 
 

@@ -15,10 +15,11 @@ recomputed from the maintained day table after each commit — a days-sized
 window, free — via the SAME decision_from_daily plan the fixed-corpus
 query uses, so the gate logic cannot fork between batch and streaming.
 
-Snapshot I/O mirrors ivm_sink.py: versioned parquet per epoch + an atomic
-pointer flip, with the committed-version guard making foreachBatch failure
-replays no-ops (count deltas are NOT idempotent — re-applying would
-double-count the batch).
+Snapshot I/O is streaming/snapshots.py, as in ivm_sink.py: versioned
+parquet per epoch with a recorded schema + an atomic pointer flip, with
+the committed-version guard making foreachBatch failure replays no-ops
+(count deltas are NOT idempotent — re-applying would double-count the
+batch).
 
 Scale stance (100 TB): the only corpus-sized work per batch is the rollup
 of THAT batch's rows (map-side combinable, delta-sized); state reads,
@@ -36,11 +37,9 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.sprt10 import daily_stats
+from . import snapshots
 
 DAILY_SCHEMA = "day timestamp, n bigint, c bigint"
-
-_POINTER = "_CURRENT"
 
 
 def empty_daily(spark: SparkSession) -> DataFrame:
@@ -53,25 +52,20 @@ def apply_events_delta(state: DataFrame, d_events: DataFrame) -> DataFrame:
     materializes (snapshot write in the sink, localCheckpoint in the
     replay). Delta rows roll up map-side BEFORE touching state; the merge
     is a days-cardinality groupBy."""
+    # Imported here: the operators package imports sprt_stream, which
+    # imports this module, so a module-level import fails whenever this
+    # module is imported before the operators package.
+    from ..operators.sprt10 import daily_stats
+
     return (state.unionByName(daily_stats(d_events))
             .groupBy("day")
             .agg(F.sum("n").alias("n"), F.sum("c").alias("c")))
 
 
-def _current_version(base: str) -> int | None:
-    ptr = os.path.join(base, _POINTER)
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as f:
-        return int(f.read().strip()[1:])
-
-
 def read_daily(spark: SparkSession, base: str,
                version: int | None = None) -> DataFrame:
-    v = _current_version(base) if version is None else version
-    if v is None:
-        return empty_daily(spark)
-    return spark.read.parquet(os.path.join(base, f"v{v}", "daily"))
+    daily = snapshots.read(spark, base, "daily", version)
+    return empty_daily(spark) if daily is None else daily
 
 
 def sprt_batch(batch: DataFrame, epoch_id: int, *, base: str) -> bool:
@@ -80,17 +74,11 @@ def sprt_batch(batch: DataFrame, epoch_id: int, *, base: str) -> bool:
     (failure replay) — the count merge is not idempotent, so the guard is
     load-bearing for correctness, exactly as in ivm_sink.ivm_batch."""
     version = epoch_id + 1
-    committed = _current_version(base)
-    if committed is not None and committed >= version:
+    if snapshots.is_committed(base, version):
         return False
     spark = batch.sparkSession
     nxt = apply_events_delta(read_daily(spark, base), batch)
-    d = os.path.join(base, f"v{version}")
-    nxt.write.mode("overwrite").parquet(os.path.join(d, "daily"))
-    tmp = os.path.join(base, _POINTER + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(f"v{version}")
-    os.replace(tmp, os.path.join(base, _POINTER))  # atomic pointer flip
+    snapshots.commit(base, version, {"daily": nxt})
     return True
 
 

@@ -18,6 +18,28 @@ def test_upsert_semantics(spark):
                    3: ("c", 30.0), 4: ("d", 40.0)}
 
 
+def test_upsert_keeps_duplicate_change_keys_and_skips_distinct(spark):
+    """A key repeated in ``changes`` removes its snapshot row once and keeps
+    every change row, as with a deduplicated key side — and the anti-join's
+    build side carries no aggregate or shuffle."""
+    from redpanda_iceberg_duckdb_spark.plans import (
+        exchange_count, physical_plan)
+
+    # VALUES relations: sizes known to the planner, as for a file-backed
+    # micro-batch, so the key side is broadcast.
+    snap = spark.sql("SELECT * FROM VALUES (1L, 'a'), (2L, 'b'), (3L, 'c')"
+                     " AS t(id, name)")
+    changes = spark.sql("SELECT * FROM VALUES (2L, 'B'), (2L, 'B2'),"
+                        " (4L, 'd') AS t(id, name)")
+    out = upsert(snap, changes, ["id"])
+    assert sorted(map(tuple, out.collect())) == [
+        (1, "a"), (2, "B"), (2, "B2"), (3, "c"), (4, "d")]
+    plan = physical_plan(out)
+    assert "LeftAnti" in plan
+    assert "HashAggregate" not in plan
+    assert exchange_count(out) == 0
+
+
 def test_scd2_apply(spark):
     t0, t1 = datetime(2024, 1, 1), datetime(2024, 6, 1)
     hist = spark.createDataFrame(

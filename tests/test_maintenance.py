@@ -74,7 +74,8 @@ def test_apply_deletions_removes_only_tombstoned_keys(spark, sf_smoke, tmp_path)
 
     src = str(tmp_path / "users_data")
     load_table(spark, sf_smoke, "events").write.parquet(src)
-    doomed = spark.createDataFrame([(3,), (7,), (11,)], "user_id long")
+    # 7 twice: a repeated tombstone key must not change the result
+    doomed = spark.createDataFrame([(3,), (7,), (7,), (11,)], "user_id long")
     out = str(tmp_path / "after_delete")
     before, after = apply_deletions(spark, src, out,
                                     tombstones=doomed, key_col="user_id")

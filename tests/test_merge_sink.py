@@ -87,3 +87,52 @@ def test_replayed_batch_is_skipped_not_overwritten(spark, tmp_path):
                            seq_col="change_seq")
     got = {r.id: r.payload for r in read_snapshot(spark, base).collect()}
     assert got == {1: "a", 2: "b"}
+
+
+def _jobs(spark, group, fn):
+    """(fn(), ids of the Spark jobs it ran) inside job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_merge_batch_two_jobs_one_file_and_read_runs_no_job(spark, tmp_path):
+    """A keyed batch spread over several partitions merges into a snapshot
+    of ONE file per version; the second batch costs at most two jobs (the
+    change-key broadcast and the write); reading the snapshot back takes
+    the recorded schema, runs no job, and equals what inference gives."""
+    import glob
+    import os
+
+    from redpanda_iceberg_duckdb_spark.streaming.merge_sink import (
+        current_snapshot_path, merge_batch)
+
+    base = str(tmp_path / "snap")
+    os.makedirs(base)
+
+    # 8 keyed rows in five partitions, with a size the optimizer knows (as
+    # for a file-backed micro-batch) and no shuffle of their own.
+    def batch(bump):
+        return spark.range(0, 8, 1, 5).selectExpr(
+            "concat('S', id) AS symbol", f"id + {bump} AS trade_count",
+            "10 * id AS total_volume")
+
+    assert merge_batch(batch(0), 0, base=base, key_cols=["symbol"])
+    ok, jobs = _jobs(spark, "merge_second_batch",
+                     lambda: merge_batch(batch(1), 1, base=base,
+                                         key_cols=["symbol"]))
+    assert ok and len(jobs) <= 2, jobs
+    for v in ("v1", "v2"):
+        assert len(glob.glob(os.path.join(base, v, "*.parquet"))) == 1, v
+
+    snap, jobs = _jobs(spark, "read_snapshot_no_job",
+                       lambda: read_snapshot(spark, base))
+    assert jobs == []
+    assert snap.schema == spark.read.parquet(
+        current_snapshot_path(base)).schema
+    assert sorted(map(tuple, snap.collect())) == sorted(
+        (f"S{i}", i + 1, 10 * i) for i in range(8))

@@ -98,7 +98,9 @@ def test_ivm_foreachbatch_refresh_matches_direct_recompute(spark, tmp_path):
     from redpanda_iceberg_duckdb_spark.operators.ivm_stream import (
         _REV, _batch_bounds)
     from redpanda_iceberg_duckdb_spark.streaming.ivm_sink import (
-        _current_version, read_state, start_ivm_refresh)
+        read_state, start_ivm_refresh)
+    from redpanda_iceberg_duckdb_spark.streaming.snapshots import (
+        current_version)
     from redpanda_iceberg_duckdb_spark.tables import load_table
 
     sf = "/root/testdata/sf0.001"
@@ -142,7 +144,7 @@ def test_ivm_foreachbatch_refresh_matches_direct_recompute(spark, tmp_path):
                           checkpoint=str(tmp_path / "ckpt"))
     q.awaitTermination(300)
 
-    assert _current_version(base) == 4  # one committed version per batch
+    assert current_version(base) == 4  # one committed version per batch
     final = read_state(spark, base).view
     direct = (orders.join(line, orders.o_orderkey == line.l_orderkey)
               .groupBy(F.col("o_custkey").alias("c_custkey"))

@@ -92,7 +92,9 @@ def test_sprt_foreachbatch_monitor_matches_prefix_recompute(spark, tmp_path):
     from redpanda_iceberg_duckdb_spark.operators.sprt_stream import (
         _batch_bounds)
     from redpanda_iceberg_duckdb_spark.streaming.sprt_sink import (
-        _current_version, read_daily, start_sprt_monitor)
+        read_daily, start_sprt_monitor)
+    from redpanda_iceberg_duckdb_spark.streaming.snapshots import (
+        current_version)
     from redpanda_iceberg_duckdb_spark.tables import load_table
 
     sf = "/root/testdata/sf0.001"
@@ -125,7 +127,7 @@ def test_sprt_foreachbatch_monitor_matches_prefix_recompute(spark, tmp_path):
                            checkpoint=str(tmp_path / "ckpt"))
     q.awaitTermination(300)
 
-    assert _current_version(base) == 4  # one committed version per batch
+    assert current_version(base) == 4  # one committed version per batch
     for v, pref in enumerate(prefixes, 1):
         got = decision_from_daily(read_daily(spark, base, v)).collect()[0]
         want = decision_from_daily(daily_stats(e.filter(pref))).collect()[0]
