@@ -10,10 +10,15 @@ trust with a committed manifest:
 
 ``sha`` fingerprints everything that can change a query's semantics that
 we can see statically: the source of the module defining the query fn,
-the sources of the package modules it imports (one relative level — this
-is what catches a helper fix in shingles.py invalidating setsim/graphrank
-queries, the exact failure mode round 7 handled by hand), and the oracle
-SQL. ``evidence`` is the CORRECTNESS_r{N} round whose green row proves the
+the raw source of every package module in its transitive import closure
+(a fix in shingles.py, or in a helper that shingles.py imports, voids the
+green rows of every query that reaches it), and the oracle SQL. The walk
+does not enter package ``__init__`` modules that define no function or
+class: they exist to register or group modules (``operators/__init__``
+imports every operator so that it registers), and following one would put
+the whole package into every closure.
+
+``evidence`` is the CORRECTNESS_r{N} round whose green row proves the
 CURRENT sha, or "window-r{N}" meaning the query sits in round N's 50-slot
 verify window awaiting that row.
 
@@ -32,6 +37,7 @@ import importlib
 import inspect
 import json
 import os
+import sys
 
 _PKG = "redpanda_iceberg_duckdb_spark"
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -46,7 +52,11 @@ def _module_source(modname: str) -> str | None:
         return None
 
 
-def _dep_modules(modname: str, src: str) -> list[str]:
+def _is_package(modname: str) -> bool:
+    return hasattr(sys.modules.get(modname), "__path__")
+
+
+def _dep_modules(modname: str, src: str, is_pkg: bool = False) -> list[str]:
     """Absolute candidate module names imported by ``src`` (the source of
     module ``modname``), restricted to this package. Parsed with the ast
     module (round-8 advice: the old line-regex missed continuation lines of
@@ -56,6 +66,8 @@ def _dep_modules(modname: str, src: str) -> list[str]:
     are emitted — candidates that aren't real modules drop out in
     _module_source."""
     parts = modname.split(".")
+    if is_pkg:
+        parts.append("__init__")   # a package's `from .x` anchors at itself
     cands: list[str] = []
     for node in ast.walk(ast.parse(src)):
         if isinstance(node, ast.ImportFrom):
@@ -82,28 +94,61 @@ def _dep_modules(modname: str, src: str) -> list[str]:
     return out
 
 
-def query_sha(q) -> str:
-    """Fingerprint of a registered Query: defining-module source, one level
-    of intra-package imported-module sources, and the oracle SQL with the
-    checkout's root replaced by a fixed token (an oracle that reads a
-    committed fixture by absolute path hashes the same in any checkout)."""
-    mod = inspect.getmodule(q.fn)
-    src = inspect.getsource(mod)
+def _registration_only(modname: str, src: str) -> bool:
+    """A package ``__init__`` with no function or class of its own."""
+    return _is_package(modname) and not any(
+        isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        for n in ast.walk(ast.parse(src)))
+
+
+def import_closure(modname: str) -> dict[str, str]:
+    """{module: source} for ``modname`` and every package module it reaches
+    through imports, skipping registration-only package ``__init__``s."""
+    found: dict[str, str] = {}
+    seen = {modname}
+    todo = [modname]
+    while todo:
+        name = todo.pop()
+        src = _module_source(name)
+        if src is None or (name != modname
+                           and _registration_only(name, src)):
+            continue
+        found[name] = src
+        for dep in _dep_modules(name, src, _is_package(name)):
+            if dep not in seen:
+                seen.add(dep)
+                todo.append(dep)
+    return found
+
+
+def query_sha(q, closures: dict[str, dict[str, str]] | None = None) -> str:
+    """Fingerprint of a registered Query: the raw source of its defining
+    module and of every module in that module's import closure, and the
+    oracle SQL with the checkout's root replaced by a fixed token (an
+    oracle that reads a committed fixture by absolute path hashes the same
+    in any checkout). ``closures`` memoizes closures by module across
+    calls."""
+    modname = inspect.getmodule(q.fn).__name__
+    if closures is None:
+        closures = {}
+    if modname not in closures:
+        closures[modname] = import_closure(modname)
+    closure = dict(closures[modname])
     h = hashlib.sha256()
-    h.update(src.encode())
+    h.update(closure.pop(modname).encode())
     h.update(b"\x00")
     h.update((q.oracle or "").replace(_REPO_ROOT, "<repo>").encode())
-    for cand in _dep_modules(mod.__name__, src):
-        dep = _module_source(cand)
-        if dep is not None:
-            h.update(b"\x01" + cand.encode() + b"\x00")
-            h.update(dep.encode())
+    for name in sorted(closure):
+        h.update(b"\x01" + name.encode() + b"\x00")
+        h.update(closure[name].encode())
     return h.hexdigest()
 
 
 def current_shas() -> dict[str, str]:
     from .registry import all_queries
-    return {name: query_sha(q) for name, q in all_queries().items()}
+    closures: dict[str, dict[str, str]] = {}
+    return {name: query_sha(q, closures)
+            for name, q in all_queries().items()}
 
 
 def load_manifest() -> dict[str, dict]:

@@ -8,7 +8,8 @@ from __future__ import annotations
 import inspect
 
 from redpanda_iceberg_duckdb_spark import verification
-from redpanda_iceberg_duckdb_spark.operators import graphrank, quantizer_train
+from redpanda_iceberg_duckdb_spark.operators import (
+    contamination, quantizer_train)
 from redpanda_iceberg_duckdb_spark.registry import all_queries
 
 _PKG = "redpanda_iceberg_duckdb_spark"
@@ -19,18 +20,18 @@ def _deps(mod):
 
 
 def test_single_dot_relative_import_resolves_to_sibling():
-    # graphrank does `from .shingles import ...` and `from .dedup import ...`
-    # — those must anchor at operators (the module's PACKAGE), not at
-    # operators.graphrank itself (the old bug).
-    deps = _deps(graphrank)
+    # contamination does `from .shingles import ...` and `from .dedup
+    # import ...` — those must anchor at operators (the module's PACKAGE),
+    # not at operators.contamination itself (the old bug).
+    deps = _deps(contamination)
     assert f"{_PKG}.operators.shingles" in deps
     assert f"{_PKG}.operators.dedup" in deps
 
 
 def test_double_dot_relative_import_climbs_one_package():
-    # graphrank's `from ..registry import register` / `from ..tables import
-    # load_table` must resolve to the package root modules.
-    deps = _deps(graphrank)
+    # contamination's `from ..registry import register` / `from ..tables
+    # import load_table` must resolve to the package root modules.
+    deps = _deps(contamination)
     assert f"{_PKG}.registry" in deps
     assert f"{_PKG}.tables" in deps
 
@@ -47,7 +48,7 @@ def test_deps_actually_contribute_to_query_sha(monkeypatch):
     """Editing a directly-imported helper module's source must change the
     importing query's sha (the manifest's advertised guarantee) and must
     NOT change the sha of a query that doesn't import it."""
-    q_graph = all_queries()["pagerank_trade_graph"]   # imports .shingles
+    q_graph = all_queries()["shared_ngram_span_pairs"]   # imports .shingles
     q_other = all_queries()["bootstrap_ci_by_type"]   # does not
     before_graph = verification.query_sha(q_graph)
     before_other = verification.query_sha(q_other)
@@ -73,3 +74,42 @@ def test_oracle_contributes_to_query_sha():
         oracle = (q.oracle or "") + " -- tweaked"
 
     assert verification.query_sha(Tweaked) != verification.query_sha(q)
+
+
+def _patched_source(monkeypatch, target):
+    orig = verification._module_source
+
+    def patched(modname):
+        src = orig(modname)
+        if modname == target and src is not None:
+            return src + "\n# edited\n"
+        return src
+
+    monkeypatch.setattr(verification, "_module_source", patched)
+
+
+def test_helper_two_imports_away_flips_query_sha(monkeypatch):
+    """incremental_dedup reaches functions.hashing only through the modules
+    it imports; an edit there must still flip its query's fingerprint."""
+    from redpanda_iceberg_duckdb_spark.operators import incremental_dedup
+    hashing = f"{_PKG}.functions.hashing"
+    assert hashing not in _deps(incremental_dedup)
+    assert hashing in verification.import_closure(incremental_dedup.__name__)
+    q = all_queries()["incremental_dedup_new_batch"]
+    before = verification.query_sha(q)
+    _patched_source(monkeypatch, hashing)
+    assert verification.query_sha(q) != before
+
+
+def test_unrelated_operator_module_flips_nothing(monkeypatch):
+    """Editing an operator module flips only the queries it defines: the
+    closure walk never enters operators/__init__, which imports them all."""
+    target = f"{_PKG}.operators.luhn14"
+    before = verification.current_shas()
+    _patched_source(monkeypatch, target)
+    after = verification.current_shas()
+    flipped = {n for n in before if before[n] != after[n]}
+    owned = {n for n, q in all_queries().items()
+             if inspect.getmodule(q.fn).__name__ == target}
+    assert owned and flipped == owned
+

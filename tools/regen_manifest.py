@@ -13,25 +13,48 @@ Promote mode: convert "window-rNN" evidence to "rNN" for queries holding a
 green row in CORRECTNESS_rNN.json whose sha is unchanged — run at the start
 of the NEXT round, before editing anything.
 
-Rehash mode (--rehash): recompute every entry's sha in place, KEEPING its
-evidence tag. Only sound immediately after a change to the fingerprint
-ALGORITHM itself (verification.py) on a tree where no query/helper source
-has changed since each entry's evidence — i.e. run it as the very next
-commit after the algorithm edit, before touching any operator module. The
-r09 use: the ast-based dependency resolution fix changed every sha (deps
-now actually contribute) without changing any query's semantics.
+Rehash mode (--rehash): recompute every entry's sha after a change to the
+fingerprint ALGORITHM itself (verification.py). A window-rNN entry keeps
+its tag. A green entry (evidence rNN) keeps its tag only if
+`git diff <commit measured for CORRECTNESS_rNN.json> -- <closure>` is
+empty for its whole import closure, i.e. nothing the new fingerprint
+covers changed since that green row; otherwise it becomes window-<round>
+and must be in the window or the pending queue (else exit nonzero listing
+it). The commit measured for CORRECTNESS_rNN.json is the parent of the
+commit that added the file (the end-of-round snapshot the driver ran).
 """
 
 from __future__ import annotations
 
+import inspect
 import json
 import os
+import subprocess
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from redpanda_iceberg_duckdb_spark.verification import (  # noqa: E402
-    current_shas, load_manifest, save_manifest)
+    current_shas, import_closure, load_manifest, save_manifest)
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _git(*args: str) -> subprocess.CompletedProcess:
+    return subprocess.run(["git", *args], cwd=_ROOT, capture_output=True,
+                          text=True)
+
+
+def _closure_unchanged_since(q, tag: str) -> bool:
+    """True if no file in q's import closure differs between the tree the
+    green row ``tag`` (rNN) was measured on and the working tree."""
+    added = _git("log", "--diff-filter=A", "--format=%H", "-1", "--",
+                 f"CORRECTNESS_{tag}.json").stdout.strip()
+    if not added:
+        return False
+    files = [os.path.relpath(sys.modules[m].__file__, _ROOT)
+             for m in import_closure(inspect.getmodule(q.fn).__name__)]
+    return _git("diff", "--quiet", f"{added}^", "--", *files).returncode == 0
 
 
 def main() -> int:
@@ -53,13 +76,32 @@ def main() -> int:
     pending = set(entry_mod._PENDING_NEXT_WINDOW)
 
     if "--rehash" in sys.argv:
-        n_re = 0
+        from redpanda_iceberg_duckdb_spark.registry import all_queries
+        qs = all_queries()
+        n_re, requeued, blocked = 0, [], []
         for n, e in manifest.items():
-            if n in shas and e.get("sha") != shas[n]:
-                e["sha"] = shas[n]
-                n_re += 1
+            if n not in shas or e.get("sha") == shas[n]:
+                continue
+            ev = e.get("evidence", "")
+            if (ev.startswith("r") and ev[1:].isdigit()
+                    and not _closure_unchanged_since(qs[n], ev)):
+                if n not in window and n not in pending:
+                    blocked.append(n)
+                    continue
+                e["evidence"] = f"window-{rnd}"
+                requeued.append(n)
+            e["sha"] = shas[n]
+            n_re += 1
+        if blocked:
+            print("ERROR: green evidence voided by a closure change, outside "
+                  "the verify window and pending queue — add them to "
+                  "_PENDING_NEXT_WINDOW first:")
+            for n in sorted(blocked):
+                print("  ", n)
+            return 1
         save_manifest(manifest)
-        print(f"rehashed {n_re} entries (evidence tags preserved)")
+        print(f"rehashed {n_re} entries; {len(requeued)} green entries "
+              f"re-queued as window-{rnd}: {sorted(requeued)}")
         return 0
 
     if promote:
