@@ -708,11 +708,11 @@ def graph_trio_scaling_demo(spark, sf_dir: str) -> dict[str, float]:
     copies leave per-copy round trajectories identical to x1, so
     wall(xM)/wall(x1) well under M is the measured per-round scaling
     claim, the same protocol as pagerank_scaling_demo. Warm min-of-2 at
-    every scale. graph10d's edge cache is clear-then-insert (one live
-    entry), so each scale's first call pays that dataset's one-off edge
-    build; a final x1 re-warm run restores the x1 cache entry the
-    extras loop reuses (round-10 ADVICE: the x2 run used to evict it,
-    silently charging the extras-loop kcore/LPA timings one rebuild)."""
+    every scale. The edge tables live in the package LRU (cache.py),
+    keyed by dataset, so each scale's first call pays that dataset's
+    one-off edge build; a final x1 re-warm run rebuilds the x1 entries
+    if the scaled datasets' entries evicted them, so the extras loop's
+    kcore/LPA timings never pay a rebuild (round-10 ADVICE)."""
     import shutil
     import tempfile
 
@@ -768,8 +768,8 @@ def graph_trio_scaling_demo(spark, sf_dir: str) -> dict[str, float]:
                 os.path.join(d, "lineitem.parquet"))
             for name in trio:
                 run(name, d, f"x{mult}")
-        # re-warm the x1 edge cache for the extras loop (evicted by the
-        # scaled runs above — the cache keeps one live entry)
+        # re-warm the x1 edge cache for the extras loop (the scaled runs'
+        # entries may have evicted it from the LRU)
         run(trio[0], sf_dir, "x1", record=False)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -886,9 +886,10 @@ def substring_scaling_demo(spark, sf_dir: str) -> dict[str, float]:
 
 
 def triangle_scaling_demo(spark, sf_dir: str) -> dict[str, float]:
-    """Scaling probe for degree-ordered triangle enumeration (graph12.py):
-    lineitem doubled with a DISJOINT copy (orderkeys and partkeys offset
-    past the originals), so the co-purchase graph becomes two isomorphic
+    """Scaling probe for degree-ordered triangle enumeration
+    (graph/structure.py): lineitem doubled with a DISJOINT copy
+    (orderkeys and partkeys offset past the originals), so the
+    co-purchase graph becomes two isomorphic
     components and the x2 run is exactly twice the x1 edge/wedge
     workload. Wedge volume is the superlinear term (O(m^1.5) worst
     case); cold(x2)/cold(x1) staying near 2 on this graph shows the

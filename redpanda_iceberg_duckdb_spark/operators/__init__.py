@@ -46,7 +46,6 @@ from . import (  # noqa: F401
     spans,           # exact shared-substring spans (arXiv:2107.06499)
     merge_replay,    # MERGE upsert / SCD2 / outer interval join replays
     ranking,         # BM25 retrieval + inverted-index postings
-    graphrank,       # integer-scaled PageRank + triangle counting
     content_chunking,  # content-defined (rolling-hash) chunk boundaries
     setsim,          # exact set-similarity join via prefix filtering
     quantizer,       # k-means Lloyd step + JL projection audit
@@ -88,7 +87,6 @@ from . import (  # noqa: F401
     domain10,        # DSIR hashed-ngram importance weights, top-k select
     calibration10,   # ECE reliability bins + Cohen's kappa agreement
     cooccur10,       # adjacent-token PMI collocations (row-local bigrams)
-    graph10,         # bipartite projection with hub-degree cap
     concentration10,  # Gini (two-phase ranks) + per-nation HHI
     mixture10,       # stratified K-fold + token-budget mixture selection
     markov10,        # event-type transition chain stationary distribution
@@ -106,16 +104,13 @@ from . import (  # noqa: F401
     dedup10b,        # sorted-neighborhood blocking graded by rank distance
     density10,       # grid-blocked DBSCAN core/border/noise labeling
     recsys10,        # item-item CF cosine neighbors, capped baskets
-    graph10b,        # landmark BFS hop histogram + exact-integer HITS
     stats10c,        # Kruskal-Wallis midranks + md5-seeded permutation test
     basket10,        # Apriori brand pairs + interval sweep-line concurrency
     nblm10,          # integer-lattice NB confusion, bigram surprisal, Heaps
     conformal10,     # exact split-conformal intervals + coverage audit
     kcenter10,       # farthest-point k-center coreset on the int lattice
     sketches10,      # AMS tug-of-war F2 sketch vs exact self-join size
-    graph10d,        # k-core peeling + min-tie-break label propagation
     stats10d,        # Benjamini-Hochberg FDR over block randomization tests
-    graph10e,        # bounded-hop Bellman-Ford SSSP on min-cents weights
     privacy10,       # t-closeness ordered-EMD audit (k-anon/l-div trio)
     mixture10b,      # alpha=1/2 temperature mixture, exact apportionment
     sprt10,          # Wald SPRT sequential decision on micro-nat lattice
@@ -125,7 +120,6 @@ from . import (  # noqa: F401
     stats11,         # Mann-Kendall, Spearman, Brown-Forsythe, McNemar
     similarity11,    # banded random-hyperplane LSH cosine near-dups
     pq11,            # product-quantization encode + distortion audit
-    graph11,         # personalized PageRank + Jaccard link prediction
     ranking11,       # Rocchio feedback + tokenizer fertility by lang
     eval11,          # decision stump, pinball loss, Fano, Davies-Bouldin
     text11,          # inter-source unigram KL divergence matrix
@@ -137,7 +131,6 @@ from . import (  # noqa: F401
     metrics12,       # degree assortativity + one-pass closed-form OLS
     events12,        # ordered funnel + exact time-decayed engagement
     fuzzy12,         # blocked Levenshtein fuzzy matching (ER join)
-    graph12,         # co-purchase clustering coefficients (ordered triangles)
     er12,            # ER clusters: fuzzy edges -> transitive closure
     evalrank12,      # average precision via two-phase (no-global-sort) ranks
     features12,      # hashing-trick collision audit (bucket-load histogram)
@@ -152,7 +145,6 @@ from . import (  # noqa: F401
     wavelet12,       # Haar energy decomposition, one-shuffle transform
     ridge12,         # ridge regression via exact Cramer on one moment row
     glm12,           # logistic first Newton/IRLS step on exact moments
-    graph12b,        # rich-club coefficient (one-pass thresholds)
     circular12,      # circular time-of-day stats (trig as shared literals)
     tail12,          # Hill tail-index on the micro-nat lattice
     funnel_stream,   # incrementally-maintained ordered funnel (replay)
@@ -160,7 +152,6 @@ from . import (  # noqa: F401
     lm13,            # interpolated Kneser-Ney bigram perplexity by source
     stats13,         # Mahalanobis outlier top-k on exact integer moments
     timeseries13,    # Holt linear level+trend on the micro lattice
-    graph13,         # per-edge triangle support histogram (truss edge stat)
     ot13,            # exact 1-D / circular Wasserstein distances
     multimodal13,    # WAV/PCM decode-and-measure (audio modality)
     cox13,           # Cox proportional hazards, Newton to convergence
@@ -190,19 +181,21 @@ from . import (  # noqa: F401
     timeseries14,    # Holt-Winters additive seasonal (shift-register CTE)
     variant14,       # Spark 4 VARIANT parse-once typed extraction
     luhn14,          # Luhn mod-10 check-digit audit (PII validator)
-    graph14,         # double-sweep BFS diameter lower bound
     tws15,           # transformWithState dedup replay (state API v2)
     sql15,           # Spark 4 SQL surfaces: pipe, collation, session_window
     stats15,         # Welch t, Granger lag-1 F, PACF, Hodges-Lehmann
-    graph15,         # truncated Katz centrality (exact walk counts)
     embed15,         # linear CKA between embedding dim-halves
     sinkhorn15,      # entropic OT plan (shared generated iteration)
     rater15,         # Krippendorff alpha (missing-rating agreement)
     spectral15,      # DFT periodogram on the 1e6 trig lattice
     lm15,            # speculative acceptance + beam-search decode
     causal15,        # stratified ATT on a pre-treatment covariate
-    graph15b,        # shortest-path DAG sigma counts (Brandes forward)
     linkage15,       # Fellegi-Sunter match/unmatch field weights
     segment15,       # unigram-LM Viterbi subword segmentation
     stats15b,        # Wilson CI + empirical-Bayes rate shrinkage
+)
+from .graph import (  # noqa: F401,E402
+    centrality,      # PageRank (fixed, converged, personalized), HITS, Katz
+    structure,       # degree stats, projection, triangles, rich club, links
+    traversal,       # BFS, double sweep, sigma, SSSP, k-core, LPA
 )

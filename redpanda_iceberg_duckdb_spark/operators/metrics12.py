@@ -18,7 +18,7 @@ shape that makes "fit a line to 100 TB" a non-event. Products reach
 ~1e19 at large SF, so moments accumulate in decimal(38,0) / hugeint.
 
 Scale stance: assortativity = the cached degree-annotated edge table
-(graphrank._edges_with_deg — built once per dataset per application) +
+(graph.edges._edges_with_deg — built once per dataset per application) +
 one broadcast join of the O(V) degree table + one global aggregate; OLS
 = one scan + one aggregate. No per-row Python anywhere.
 """
@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..registry import register
 from ..tables import load_table
-from .graphrank import _edges_with_deg
+from .graph.edges import _edges_with_deg
 
 _ASSORT_ORACLE = """
 WITH eraw AS (SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s

@@ -117,10 +117,11 @@ def test_alternating_above_gate_graphs_build_each_layout_once(
     Alternating them must build each layout once: the second round adds
     no cache miss and reuses the same co-purchase layout object, and the
     answers do not change."""
-    from redpanda_iceberg_duckdb_spark.operators.graph10d import (
+    from redpanda_iceberg_duckdb_spark.operators.graph import edges
+    from redpanda_iceberg_duckdb_spark.operators.graph.edges import (
         copurchase_join_strategy)
 
-    monkeypatch.setenv("SPARK_GRAFT_ITERATE_BROADCAST_BOUND", "0")
+    monkeypatch.setattr(edges, "ITERATE_BROADCAST_BOUND", 0)
     d = _copy_tables(str(tmp_path / "ds"), "orders", "lineitem")
     qs = all_queries()
     first = [_rows(qs[n].fn(spark, d))

@@ -118,6 +118,23 @@ def test_bench_cache_demos_smoke(spark, sf_smoke):
                for v in {**tri, **bpe}.values())
 
 
+def test_bench_graph_demos_smoke(spark, sf_smoke):
+    """Smoke the two graph demos of the bench extras path at sf0.001 and
+    check their exact key sets."""
+    import bench
+
+    trio = bench.graph_trio_scaling_demo(spark, sf_smoke)
+    assert set(trio) == {
+        f"{q}_x{m}" for m in (1, 2, 4)
+        for q in ("kcore_degree_histogram", "label_propagation_sizes",
+                  "sssp_cheapest_paths")}
+    hot = bench.pagerank_hot_vertex_demo(spark, sf_smoke)
+    assert set(hot) == {"pagerank_hotvertex_spread",
+                        "pagerank_hotvertex_hot"}
+    assert all(isinstance(v, float) and v >= 0
+               for v in {**trio, **hot}.values())
+
+
 def _load_greens() -> dict[str, set[str]]:
     """round tag -> set of query names with a green CORRECTNESS row."""
     import json

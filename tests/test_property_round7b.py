@@ -104,7 +104,7 @@ def test_ppjoin_zero_false_negatives_on_random_corpora(
 
 def _py_pagerank(edges, iters=5, scale=1_000_000, teleport=150_000):
     """Pure-Python replica of the exact integer recurrence
-    (graphrank.py module docstring)."""
+    (graph/centrality.py module docstring)."""
     sym = [(2 * c, 2 * s + 1) for c, s in edges]
     sym += [(2 * s + 1, 2 * c) for c, s in edges]
     sym = list(set(sym))

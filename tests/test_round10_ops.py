@@ -16,7 +16,7 @@ from .table_fixtures import write_single
 
 def test_edge_cache_misses_on_data_rewrite(spark, tmp_path):
     """Rewriting the parquet under an sf_dir within one Spark application
-    (the bench tmp-dir pattern) must invalidate graphrank's checkpointed
+    (the bench tmp-dir pattern) must invalidate the trade graph's checkpointed
     edge cache: the second run must see the NEW data, not stale blocks."""
     d = str(tmp_path / "ds")
     os.makedirs(d)
@@ -349,7 +349,7 @@ def test_bipartite_projection_hub_cap_binds(spark, tmp_path):
     """Plant one hub customer linked to 100 suppliers: its C(100,2)=4950
     pairs must NOT appear in the projection (only the normal customers'
     pairs do) — proving the stop-node rule actually executes."""
-    from redpanda_iceberg_duckdb_spark.operators.graph10 import (
+    from redpanda_iceberg_duckdb_spark.operators.graph.structure import (
         bipartite_supplier_projection)
 
     rows_o, rows_l = [], []

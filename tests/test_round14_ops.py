@@ -1,5 +1,5 @@
 """Round-14 targeted tests: the shared co-purchase edge cache
-(graph12.copurchase_oriented_edges — the round-13 verdict's triangle-family
+(graph.edges.copurchase_oriented_edges — the round-13 verdict's triangle-family
 fix), the WAV ingest dead-letter micro-batch path, plus gates for
 operators added this round."""
 
@@ -41,7 +41,7 @@ def test_copurchase_cache_shared_across_triangle_family(spark):
     it (identity of the checkpointed frame, no new cache miss), so the
     edge build is paid once per dataset."""
     from redpanda_iceberg_duckdb_spark import cache
-    from redpanda_iceberg_duckdb_spark.operators.graph12 import (
+    from redpanda_iceberg_duckdb_spark.operators.graph.edges import (
         copurchase_oriented_edges)
 
     sf = "/root/testdata/sf0.001"

@@ -207,7 +207,7 @@ def test_periodogram_matches_independent(spark, sf_smoke):
 def test_katz_matches_independent_matrix_power(spark, sf_smoke):
     import numpy as np
 
-    from redpanda_iceberg_duckdb_spark.operators.graph10d import (
+    from redpanda_iceberg_duckdb_spark.operators.graph.edges import (
         copurchase_edges)
 
     e = [(r.src, r.dst)
@@ -357,7 +357,7 @@ def test_beam_search_matches_independent(spark, sf_smoke):
 def test_sigma_matches_independent_bfs(spark, sf_smoke):
     import collections
 
-    from redpanda_iceberg_duckdb_spark.operators.graph10d import (
+    from redpanda_iceberg_duckdb_spark.operators.graph.edges import (
         copurchase_edges)
 
     adj = collections.defaultdict(list)
@@ -553,7 +553,7 @@ def test_edge_triangle_histogram_matches_leftjoin_shape(spark, sf_smoke):
     row-for-row equality — guards the support-0 arithmetic."""
     from pyspark.sql import functions as F
 
-    from redpanda_iceberg_duckdb_spark.operators.graph12 import (
+    from redpanda_iceberg_duckdb_spark.operators.graph.edges import (
         copurchase_oriented_edges)
 
     new = [(r.support, r.n_edges)

@@ -11,11 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from redpanda_iceberg_duckdb_spark import plans
-from redpanda_iceberg_duckdb_spark.operators import graph_iterate
+from redpanda_iceberg_duckdb_spark.operators.graph import edges as graph_edges
 from redpanda_iceberg_duckdb_spark.registry import all_queries
-
-_BOUND_ENV = "SPARK_GRAFT_ITERATE_BROADCAST_BOUND"
-
 
 def _node_headers(plan: str, op: str) -> int:
     return len(re.findall(rf"(?m)^\(\d+\)\s+{op}\b", plan))
@@ -24,7 +21,7 @@ def _node_headers(plan: str, op: str) -> int:
 def test_iterate_join_strategy_plan_shapes(spark):
     """Under the gate the per-round join is a BroadcastHashJoin; above it
     the edge side is pre-partitioned (pay-once) and ONLY the iterate side
-    shuffles — the plan-level contract of graph_iterate."""
+    shuffles — the plan-level contract of graph.edges.iterate_join_strategy."""
     edges = (spark.range(2000)
              .select((F.col("id") % 97).alias("src"),
                      (F.col("id") % 89).alias("dst"))
@@ -32,14 +29,14 @@ def test_iterate_join_strategy_plan_shapes(spark):
     it = (spark.range(50).select(F.col("id").alias("src"))
           .localCheckpoint())
 
-    e1, hint1 = graph_iterate.iterate_join_strategy(
+    e1, hint1 = graph_edges.iterate_join_strategy(
         spark, edges, "src", 50, ("t16", "under"))
     p1 = plans.physical_plan(e1.join(hint1(it), "src"))
     assert "BroadcastHashJoin" in p1
     assert "Exchange hashpartitioning" not in p1   # edge table never moves
 
-    e2, hint2 = graph_iterate.iterate_join_strategy(
-        spark, edges, "src", graph_iterate.broadcast_iterate_bound() + 1,
+    e2, hint2 = graph_edges.iterate_join_strategy(
+        spark, edges, "src", graph_edges.ITERATE_BROADCAST_BOUND + 1,
         ("t16", "over"))
     # Emulate the above-gate regime honestly: at real scale the iterate's
     # stats exceed autoBroadcastJoinThreshold so the planner cannot
@@ -73,11 +70,8 @@ def test_gated_graph_loops_both_paths_agree(spark, sf_smoke, name,
     fallback (bound=0, the 100 TB path) must produce identical rows."""
     q = all_queries()[name]
     bcast = sorted(map(tuple, q.fn(spark, sf_smoke).collect()))
-    monkeypatch.setenv(_BOUND_ENV, "0")
-    try:
-        fallback = sorted(map(tuple, q.fn(spark, sf_smoke).collect()))
-    finally:
-        monkeypatch.delenv(_BOUND_ENV, raising=False)
+    monkeypatch.setattr(graph_edges, "ITERATE_BROADCAST_BOUND", 0)
+    fallback = sorted(map(tuple, q.fn(spark, sf_smoke).collect()))
     assert bcast == fallback, name
 
 

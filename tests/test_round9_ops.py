@@ -88,28 +88,28 @@ def test_f9_fixture_regeneration_is_stable(tmp_path):
 
 
 def test_dataset_keyed_caches_do_not_cross_contaminate(spark):
-    """graphrank's edge table is cached per (applicationId, data
+    """The trade-graph edge table is cached per (applicationId, data
     fingerprint). Running against two different datasets back-to-back
     must (a) give each dataset its own correct result — no stale reuse —
     and (b) build each dataset's edge table once: going back to the first
     dataset reuses its entry (same object, no new miss)."""
     from redpanda_iceberg_duckdb_spark import cache
-    from redpanda_iceberg_duckdb_spark.operators import graphrank
+    from redpanda_iceberg_duckdb_spark.operators.graph import edges
 
     qs = all_queries()
     sf_a, sf_b = "/root/testdata/sf0.001", "/root/testdata/sf0.01"
     a = qs["pagerank_trade_graph"].fn(spark, sf_a)
     rows_a = [tuple(r) for r in a.collect()]
-    edges_a = graphrank._edges_with_deg(spark, sf_a)
+    edges_a = edges._edges_with_deg(spark, sf_a)
     b = qs["pagerank_trade_graph"].fn(spark, sf_b)
     rows_b = [tuple(r) for r in b.collect()]
-    assert graphrank._edges_with_deg(spark, sf_b) is not edges_a
+    assert edges._edges_with_deg(spark, sf_b) is not edges_a
     assert rows_a != rows_b                  # no stale cross-dataset reuse
     # back to the first dataset: served by its own entry, identical rows
     misses = cache.stats()["misses"]
     rows_a2 = [tuple(r) for r in
                qs["pagerank_trade_graph"].fn(spark, sf_a).collect()]
-    assert graphrank._edges_with_deg(spark, sf_a) is edges_a
+    assert edges._edges_with_deg(spark, sf_a) is edges_a
     assert cache.stats()["misses"] == misses
     assert rows_a2 == rows_a
 

@@ -113,3 +113,14 @@ def test_unrelated_operator_module_flips_nothing(monkeypatch):
              if inspect.getmodule(q.fn).__name__ == target}
     assert owned and flipped == owned
 
+
+
+def test_triple_dot_relative_import_climbs_two_packages():
+    # The graph package sits one level below operators: `from ...registry`
+    # reaches the package root and `from ..dedup` the operators package.
+    from redpanda_iceberg_duckdb_spark.operators.graph import structure
+    deps = _deps(structure)
+    assert f"{_PKG}.registry" in deps
+    assert f"{_PKG}.tables" in deps
+    assert f"{_PKG}.operators.dedup" in deps
+    assert f"{_PKG}.operators.graph.edges" in deps
