@@ -9,7 +9,7 @@ memoized edge table every round. The driver owns the loop discipline:
 - the rounds run at the loop shuffle width
   (``pinned_shuffle_partitions(spark, iterate_partitions(spark))``), not
   at the session width sized for corpus scans — measured at sf0.1 on
-  local[32], 1.6-2.3x faster per loop;
+  local[32], 1.7-2.5x faster per loop;
 - each round's frame is cut from its lineage with ONE eager
   ``localCheckpoint``, so the plan does not deepen round by round;
 - an optional early-exit rule is asked after each round.
