@@ -14,6 +14,7 @@ from redpanda_iceberg_duckdb_spark import plans
 from redpanda_iceberg_duckdb_spark.operators.graph import edges as graph_edges
 from redpanda_iceberg_duckdb_spark.registry import all_queries
 
+
 def _node_headers(plan: str, op: str) -> int:
     return len(re.findall(rf"(?m)^\(\d+\)\s+{op}\b", plan))
 
@@ -21,7 +22,8 @@ def _node_headers(plan: str, op: str) -> int:
 def test_iterate_join_strategy_plan_shapes(spark):
     """Under the gate the per-round join is a BroadcastHashJoin; above it
     the edge side is pre-partitioned (pay-once) and ONLY the iterate side
-    shuffles — the plan-level contract of graph.edges.iterate_join_strategy."""
+    shuffles — the plan-level contract of
+    graph.edges.iterate_join_strategy."""
     edges = (spark.range(2000)
              .select((F.col("id") % 97).alias("src"),
                      (F.col("id") % 89).alias("dst"))
