@@ -518,7 +518,7 @@ def fdr_scaling_demo(spark, sf_dir: str) -> dict[str, float]:
     (round-10 verdict item 3): bh_fdr_discoveries and
     hash_permutation_test claim an O(cells x B) replicate ensemble whose
     cost is INDEPENDENT of the event count — the only full-data work is
-    the one cell-aggregation pass (stats10d.py docstring). Doubling the
+    the one cell-aggregation pass (stats/resampling.py docstring). Doubling the
     events corpus (offset ids, so new rows hash into the same fixed cell
     lattice) should therefore move wall-clock by far less than 2x; this
     measures that claim rather than quoting it."""

@@ -93,10 +93,8 @@ from . import (  # noqa: F401
     jackknife10,     # delete-one-bucket jackknife SE for ratio metrics
     drift10,         # PSI batch drift + categorical mutual information
     cdcdiff10,       # snapshot diff -> insert/update/delete changelog
-    stats10,         # rank-cut trimmed + winsorized means per group
     experiment10,    # difference-in-differences + Qini uplift deciles
     valuation10,     # exact 3-group Shapley data valuation
-    stats10b,        # two-sample KS on the integer lattice + one-way ANOVA
     timeseries10,    # dense-spine hourly ACF + purchase/view lead-lag CCF
     retrieval10b,    # NDCG@10 with integer fixed-point log discounts
     sampling10b,     # Neyman allocation, exact largest-remainder split
@@ -104,20 +102,17 @@ from . import (  # noqa: F401
     dedup10b,        # sorted-neighborhood blocking graded by rank distance
     density10,       # grid-blocked DBSCAN core/border/noise labeling
     recsys10,        # item-item CF cosine neighbors, capped baskets
-    stats10c,        # Kruskal-Wallis midranks + md5-seeded permutation test
     basket10,        # Apriori brand pairs + interval sweep-line concurrency
     nblm10,          # integer-lattice NB confusion, bigram surprisal, Heaps
     conformal10,     # exact split-conformal intervals + coverage audit
     kcenter10,       # farthest-point k-center coreset on the int lattice
     sketches10,      # AMS tug-of-war F2 sketch vs exact self-join size
-    stats10d,        # Benjamini-Hochberg FDR over block randomization tests
     privacy10,       # t-closeness ordered-EMD audit (k-anon/l-div trio)
     mixture10b,      # alpha=1/2 temperature mixture, exact apportionment
     sprt10,          # Wald SPRT sequential decision on micro-nat lattice
     shard10,         # rendezvous-hashing shard audit (minimal disruption)
     binseg10,        # depth-2 binary segmentation, division-free argmax
     sprt_stream,     # SPRT gate maintained across streaming micro-batches
-    stats11,         # Mann-Kendall, Spearman, Brown-Forsythe, McNemar
     similarity11,    # banded random-hyperplane LSH cosine near-dups
     pq11,            # product-quantization encode + distortion audit
     ranking11,       # Rocchio feedback + tokenizer fertility by lang
@@ -150,7 +145,6 @@ from . import (  # noqa: F401
     funnel_stream,   # incrementally-maintained ordered funnel (replay)
     infotheory12,    # Markov entropy rate on the micro-nat lattice
     lm13,            # interpolated Kneser-Ney bigram perplexity by source
-    stats13,         # Mahalanobis outlier top-k on exact integer moments
     timeseries13,    # Holt linear level+trend on the micro lattice
     ot13,            # exact 1-D / circular Wasserstein distances
     multimodal13,    # WAV/PCM decode-and-measure (audio modality)
@@ -167,12 +161,9 @@ from . import (  # noqa: F401
     dtw13,           # dynamic time warping on the hour-profile grid
     stl13,           # trend/seasonality strength (variance decomposition)
     burst13,         # token burstiness cf/df (template-spam signal)
-    stats13b,        # NB overdispersion fit, weighted Jaccard, runs test
     hapax13,         # hapax share + TTR per source (lexical richness)
     wav_ingest14,    # WAV dead-letter ingest replay (audio St5)
     embed14,         # Matryoshka recall, linear MMD, exact medoids
-    stats14,         # Ljung-Box, Page-Hinkley, Friedman, Anderson-Darling
-    stats14b,        # Kendall tau-b, Box-Cox profile likelihood grid
     robust14,        # Huber location IRLS to convergence
     multimodal14,    # frame-indexed container walk + frame sampling
     rouge14,         # ROUGE-2 multiset overlap on LSH candidate pairs
@@ -183,7 +174,6 @@ from . import (  # noqa: F401
     luhn14,          # Luhn mod-10 check-digit audit (PII validator)
     tws15,           # transformWithState dedup replay (state API v2)
     sql15,           # Spark 4 SQL surfaces: pipe, collation, session_window
-    stats15,         # Welch t, Granger lag-1 F, PACF, Hodges-Lehmann
     embed15,         # linear CKA between embedding dim-halves
     sinkhorn15,      # entropic OT plan (shared generated iteration)
     rater15,         # Krippendorff alpha (missing-rating agreement)
@@ -192,10 +182,15 @@ from . import (  # noqa: F401
     causal15,        # stratified ATT on a pre-treatment covariate
     linkage15,       # Fellegi-Sunter match/unmatch field weights
     segment15,       # unigram-LM Viterbi subword segmentation
-    stats15b,        # Wilson CI + empirical-Bayes rate shrinkage
 )
 from .graph import (  # noqa: F401,E402
     centrality,      # PageRank (fixed, converged, personalized), HITS, Katz
     structure,       # degree stats, projection, triangles, rich club, links
     traversal,       # BFS, double sweep, sigma, SSSP, k-core, LPA
+)
+from .stats import (  # noqa: F401,E402
+    moments,         # ANOVA/Brown-Forsythe F, Welch, Mahalanobis, rates
+    rank,            # KS, Anderson-Darling, Kruskal-Wallis, Spearman
+    resampling,      # md5-seeded permutation test, BH FDR
+    series,          # Ljung-Box, Page-Hinkley, Kendall, Granger, PACF
 )

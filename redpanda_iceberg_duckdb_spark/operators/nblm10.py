@@ -2,7 +2,7 @@
 pattern: multinomial Naive Bayes classification, add-one bigram surprisal
 banding, and a Heaps'-law vocabulary-growth fit.
 
-The common determinism trick (stats10c / ARCHITECTURE.md "integer-lattice
+The common determinism trick (stats/ / ARCHITECTURE.md "integer-lattice
 statistics"): every log-probability is snapped ONCE to micro-nats —
 ``cast(round(ln(p) * 1e6) as bigint)`` — and everything downstream (per-doc
 sums, argmax, band assignment, regression sums) is exact 64-bit integer

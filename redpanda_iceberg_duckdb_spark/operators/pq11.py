@@ -14,7 +14,7 @@ exact floor(x*1e4) lattice of quantizer.py: per (vector, subspace, code)
 the squared distance is sum_k (qv_k*n - s_k)^2 — an exact integer —
 compared as (int/n^2) doubles with ties to the smallest code, so both
 engines pick identical codes. Per-vector distortion is then carried as
-floor(d_int * 1e6 / n^2) — an exact 128-bit integer (the stats10b
+floor(d_int * 1e6 / n^2) — an exact 128-bit integer (the stats.moments
 fixed-point discipline), so the subspace SUM is order-insensitive
 integer addition and the reported average is one final division.
 

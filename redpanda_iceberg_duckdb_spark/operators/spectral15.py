@@ -13,7 +13,7 @@ the same literal expression in both engines, so the products
 x_t * c_kt and the Sc/Ss accumulations are exact bigint sums in ANY
 order; the power ratio divides once at the end. The only cross-engine
 exposure is the repo's accepted 1-ulp libm risk (cos/sin at the lattice
-rounding boundary — the stats14b pow/ln acceptance).
+rounding boundary — the stats.moments Box-Cox pow/ln acceptance).
 
 Scale stance (100 TB): the corpus reduces map-side to per-hour counts;
 the (k, t) grid is 12 x N rows (time-range-bounded, independent of

@@ -23,30 +23,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..registry import register
-from ..tables import load_table
+from .stats.series import (centered, dense_hourly, hourly_spine_sql,
+                           lag_products)
 
 _MAX_LAG = 8
 _X, _Y = "view", "purchase"  # pairs are (x_t, y_{t+lag}): +lag = y follows x
 _CCF_LAGS = list(range(-6, 7))
 
 
-def _hourly_spine_sql(filt: str = "TRUE") -> str:
-    """Dense (hour_idx, cnt) CTE body over events matching `filt`."""
-    return f"""
-h AS (
-  SELECT cast(floor(epoch(ts) / 3600) AS bigint) AS hr, count(*) AS c
-  FROM events WHERE {filt} GROUP BY 1),
-b AS (SELECT min(hr) AS lo, max(hr) AS hi FROM h),
-spine AS (
-  SELECT g.hr FROM b, lateral (
-    SELECT unnest(generate_series(b.lo, b.hi)) AS hr) g),
-d AS (
-  SELECT s.hr, coalesce(h.c, 0) AS c FROM spine s LEFT JOIN h USING (hr))"""
-
-
 def _acf_oracle() -> str:
     return f"""
-WITH {_hourly_spine_sql()},
+WITH {hourly_spine_sql()},
 t AS (SELECT cast(count(*) AS bigint) AS n,
              cast(sum(c) AS bigint) AS s FROM d),
 den AS (
@@ -76,27 +63,13 @@ def acf_hourly_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(lag, n_pairs, acf): autocorrelation of the dense hourly event-count
     series at lags 1..8, exact N-scaled integer moments (module
     docstring)."""
-    # r16 scan-audit collapse (guide §2.4 / r10 multi-branch lesson): the
-    # dense hourly frame feeds t, the variance aggregate, AND both sides
-    # of every lagged pair join — the plan re-ran the events scan 12x.
-    # One eager checkpoint of the O(hours) frame; every branch reads the
-    # RDD (12 scans -> 2, the spine's min/max pass and the count pass).
-    d = _dense_hourly(spark, sf_dir, F.lit(True)).localCheckpoint(
-        eager=True)
-    t = d.agg(F.count(F.lit(1)).cast("long").alias("n"),
-              F.sum("c").cast("long").alias("s"))
-    dt = d.crossJoin(F.broadcast(t)) \
-        .select("hr", (F.col("n") * F.col("c") - F.col("s")).alias("z"))
-    den = dt.agg(F.sum(F.col("z") * F.col("z")).alias("dvar"))
-    probe = (dt.select("hr", F.col("z").alias("za"))
-             .withColumn("lag", F.explode(F.array(
-                 *[F.lit(k) for k in range(1, _MAX_LAG + 1)])))
-             .withColumn("hr_b", F.col("hr") + F.col("lag")))
-    pairs = (probe.join(dt.select(F.col("hr").alias("hr_b"),
-                                  F.col("z").alias("zb")), "hr_b")
-             .groupBy("lag")
-             .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"),
-                  F.sum(F.col("za") * F.col("zb")).alias("numer")))
+    # The dense frame feeds the centering, the variance AND both sides
+    # of every lagged pair join: one eager checkpoint of the O(hours)
+    # frame keeps the events scan out of each branch.
+    d = dense_hourly(spark, sf_dir, checkpoint=True, c=F.lit(True))
+    z, _ = centered(d)
+    den = z.agg(F.sum(F.col("z") * F.col("z")).alias("dvar"))
+    pairs = lag_products(z, z, range(1, _MAX_LAG + 1))
     return (pairs.crossJoin(F.broadcast(den))
             .select(F.col("lag").cast("int").alias("lag"), "n_pairs",
                     F.round(F.col("numer").cast("double") / F.col("dvar"),
@@ -156,49 +129,22 @@ def crosscorr_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase (y) hourly series at lags -6..6, pairing (x_t, y_{t+lag})
     — a positive-lag peak means purchases FOLLOW views by `lag` hours;
     shared dense spine, exact integer moments (module docstring)."""
-    ev = load_table(spark, sf_dir, "events")
-    hr = F.floor(F.unix_timestamp("ts") / 3600).cast("long").alias("hr")
-    # r16 scan-audit collapse (guide §2.4 / r10 multi-branch lesson): hx
-    # and hy feed bounds, the dense series, the scaled moments, the
-    # variance aggregates and every lagged pair join — the plan re-ran
-    # the events scan 40x (each branch re-derived its own copy). ONE
-    # events scan now builds the (event_type, hr) count frame — bounded
-    # by 2 x hours — eagerly checkpointed; hx/hy are filters of the RDD,
-    # so every downstream branch is parquet-free (40 scans -> 1).
-    h2 = (ev.filter(F.col("event_type").isin(_X, _Y))
-          .select(F.col("event_type").alias("et"), hr)
-          .groupBy("et", "hr").agg(F.count(F.lit(1)).alias("c"))
-          .localCheckpoint(eager=True))
-    hx = h2.filter(F.col("et") == _X).select("hr", "c")
-    hy = h2.filter(F.col("et") == _Y).select("hr", "c")
-    bounds = (hx.select("hr").union(hy.select("hr"))
-              .agg(F.min("hr").alias("lo"), F.max("hr").alias("hi")))
-    spine = bounds.select(
-        F.explode(F.sequence("lo", "hi")).alias("hr"))
-    dx = (spine.join(hx, "hr", "left")
-          .select("hr", F.coalesce("c", F.lit(0)).alias("c")))
-    dy = (spine.join(hy, "hr", "left")
-          .select("hr", F.coalesce("c", F.lit(0)).alias("c")))
-    t = (spine.agg(F.count(F.lit(1)).cast("long").alias("n"))
-         .crossJoin(F.broadcast(
-             dx.agg(F.sum("c").cast("long").alias("sx"))))
-         .crossJoin(F.broadcast(
-             dy.agg(F.sum("c").cast("long").alias("sy")))))
-    zx = (dx.crossJoin(F.broadcast(t))
-          .select("hr", (F.col("n") * F.col("c") - F.col("sx")).alias("z")))
-    zy = (dy.crossJoin(F.broadcast(t))
-          .select("hr", (F.col("n") * F.col("c") - F.col("sy")).alias("z")))
-    den = (zx.agg(F.sum(F.col("z") * F.col("z")).alias("vx"))
-           .crossJoin(zy.agg(F.sum(F.col("z") * F.col("z")).alias("vy"))))
-    probe = (zx.select("hr", F.col("z").alias("za"))
-             .withColumn("lag", F.explode(F.array(
-                 *[F.lit(k) for k in _CCF_LAGS])))
-             .withColumn("hr_b", F.col("hr") + F.col("lag")))
-    pairs = (probe.join(zy.select(F.col("hr").alias("hr_b"),
-                                  F.col("z").alias("zb")), "hr_b")
-             .groupBy("lag")
-             .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"),
-                  F.sum(F.col("za") * F.col("zb")).alias("numer")))
+    # ONE events scan builds the dense (hr, x, y) frame, eagerly
+    # checkpointed: it feeds the moments, both variances and every
+    # lagged pair join, which would each re-scan events otherwise.
+    et = F.col("event_type")
+    d = dense_hourly(spark, sf_dir, checkpoint=True,
+                     x=et == _X, y=et == _Y)
+    t = d.agg(F.count(F.lit(1)).cast("long").alias("n"),
+              F.sum("x").cast("long").alias("sx"),
+              F.sum("y").cast("long").alias("sy"))
+    z = d.crossJoin(F.broadcast(t)).select(
+        "hr", (F.col("n") * F.col("x") - F.col("sx")).alias("zx"),
+        (F.col("n") * F.col("y") - F.col("sy")).alias("zy"))
+    den = z.agg(F.sum(F.col("zx") * F.col("zx")).alias("vx"),
+                F.sum(F.col("zy") * F.col("zy")).alias("vy"))
+    pairs = lag_products(z.select("hr", F.col("zx").alias("z")),
+                         z.select("hr", F.col("zy").alias("z")), _CCF_LAGS)
     return (pairs.crossJoin(F.broadcast(den))
             .select(F.col("lag").cast("int").alias("lag"), "n_pairs",
                     F.round(F.col("numer").cast("double")
@@ -206,14 +152,3 @@ def crosscorr_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      * F.col("vy")), 6).alias("ccf"))
             .orderBy("lag"))
 
-
-def _dense_hourly(spark: SparkSession, sf_dir: str, cond) -> DataFrame:
-    """Dense (hr, c) hourly counts over events matching `cond`."""
-    ev = load_table(spark, sf_dir, "events").filter(cond)
-    h = (ev.select(F.floor(F.unix_timestamp("ts") / 3600)
-                   .cast("long").alias("hr"))
-         .groupBy("hr").agg(F.count(F.lit(1)).alias("c")))
-    spine = (h.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
-             .select(F.explode(F.sequence("lo", "hi")).alias("hr")))
-    return (spine.join(h, "hr", "left")
-            .select("hr", F.coalesce("c", F.lit(0)).alias("c")))

@@ -227,7 +227,7 @@ def test_mcnemar_planted_flips(spark, tmp_path):
     """Planted engagement flips: 3 users drop below the threshold in the
     second half, 1 rises above it -> b=3, c=1,
     chi2_cc = (|3-1|-1)^2/4 = 0.25."""
-    from redpanda_iceberg_duckdb_spark.operators.stats11 import _THR
+    from redpanda_iceberg_duckdb_spark.operators.stats.moments import _THR
 
     t0 = dt.datetime(2024, 1, 2)
     t1 = dt.datetime(2024, 1, 20)
