@@ -295,8 +295,8 @@ def ljung_box_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the 1e-9 lattice before the integer sum; the autocorrelation
     numerators/denominator are the exact N-scaled bigint moments of
     acf_hourly_lags."""
-    # The dense frame feeds every branch below: one eager checkpoint of
-    # the O(hours) frame keeps the events scan out of each of them.
+    # d feeds every branch below; checkpointing its hourly counts scans
+    # events once instead of once per branch.
     d = dense_hourly(spark, sf_dir, checkpoint=True, c=F.lit(True))
     z, t = centered(d)
     den = z.agg(F.sum(F.col("z") * F.col("z")).alias("dvar"))
@@ -613,9 +613,8 @@ def pacf_durbin_levinson(spark: SparkSession, sf_dir: str) -> DataFrame:
     acf_hourly_lags reports (PACF is defined here ON those estimates; the
     recursion itself is pure +-*/ and unrolls to an identical expression
     tree in both engines)."""
-    # The dense frame feeds the variance and both sides of the lag join:
-    # one eager checkpoint of the O(hours) frame keeps the events scan
-    # out of each branch.
+    # d feeds the variance and both sides of the lag join; checkpointing
+    # its hourly counts scans events once instead of once per branch.
     d = dense_hourly(spark, sf_dir, checkpoint=True, c=F.lit(True))
     z, _ = centered(d)
     den = z.agg(F.sum(F.col("z") * F.col("z")).alias("dvar"))
@@ -630,8 +629,8 @@ def pacf_durbin_levinson(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-evaluate the whole upstream build per branch; stack pivots the
     # same five (lag, pacf) rows out of ONE p5 evaluation. Identical
     # values and types; the oracle keeps its UNION (DuckDB CTEs are
-    # shared). `r` binds as a query argument, so no session temp view
-    # is named or replaced.
+    # shared). `r` binds as a query argument under a generated name that
+    # is dropped after analysis, so the caller's temp views are untouched.
     return spark.sql(f"""
         WITH r AS (SELECT * FROM {{r}}),
         {_DL_SQL.lstrip()}

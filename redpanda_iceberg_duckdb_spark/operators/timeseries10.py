@@ -63,9 +63,9 @@ def acf_hourly_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(lag, n_pairs, acf): autocorrelation of the dense hourly event-count
     series at lags 1..8, exact N-scaled integer moments (module
     docstring)."""
-    # The dense frame feeds the centering, the variance AND both sides
-    # of every lagged pair join: one eager checkpoint of the O(hours)
-    # frame keeps the events scan out of each branch.
+    # d feeds the variance and both sides of every lag join;
+    # checkpointing its hourly counts scans events once instead of once
+    # per branch.
     d = dense_hourly(spark, sf_dir, checkpoint=True, c=F.lit(True))
     z, _ = centered(d)
     den = z.agg(F.sum(F.col("z") * F.col("z")).alias("dvar"))
@@ -129,9 +129,9 @@ def crosscorr_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase (y) hourly series at lags -6..6, pairing (x_t, y_{t+lag})
     — a positive-lag peak means purchases FOLLOW views by `lag` hours;
     shared dense spine, exact integer moments (module docstring)."""
-    # ONE events scan builds the dense (hr, x, y) frame, eagerly
-    # checkpointed: it feeds the moments, both variances and every
-    # lagged pair join, which would each re-scan events otherwise.
+    # d feeds the moments, both variances and every lag join;
+    # checkpointing its hourly counts scans events once instead of once
+    # per branch.
     et = F.col("event_type")
     d = dense_hourly(spark, sf_dir, checkpoint=True,
                      x=et == _X, y=et == _Y)

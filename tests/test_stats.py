@@ -143,7 +143,7 @@ _OPERATORS = os.path.join(
 
 
 def test_round_named_operator_modules_only_shrink():
-    """Operator modules named for the round that added them (`stats14b`,
+    """Operator modules named for the round that added them (`dtw13`,
     `lm15`) stay at or below 102: new code lands in a domain module."""
     named = [f for _, _, files in os.walk(_OPERATORS) for f in files
              if re.search(r"\d+[a-z]?\.py$", f)]
