@@ -43,9 +43,12 @@ the float operations the two engines see identical. The rules:
 
 Scale stance: each test reduces the corpus with one map-side-combinable
 aggregate (per value, per (group, value), per hour, per user) and then
-works on that bounded reduction. Cumulative sums over a data-sized
-frame use the two-phase bucketed running sum (``rank.running_sums``):
+works on that bounded reduction. KS, Kruskal-Wallis and Spearman
+cumulate with the two-phase bucketed running sum (``rank.running_sums``):
 windows partitioned by fixed-width value buckets, plus a tiny broadcast
-of bucket offsets — no global single-partition sort. Global windows run
-only over bounded frames (the hour grid, the day x type cells).
+of bucket offsets — no global single-partition sort. Anderson-Darling
+and Brown-Forsythe keep one plain window over their per-value frames,
+since the helper reads its input twice and would add parquet scans. The
+other global windows run only over bounded frames (the hour grid, the
+day x type cells).
 """

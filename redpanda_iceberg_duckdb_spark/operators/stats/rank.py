@@ -3,10 +3,13 @@ and winsorized means, two-sample Kolmogorov-Smirnov and Anderson-Darling,
 Kruskal-Wallis, Spearman, Friedman and the Hodges-Lehmann shift.
 
 Ranks are doubled midranks and every cumulative count is an exact bigint
-(package docstring). Cumulative sums over a data-sized frame go through
-``running_sums``, the two-phase bucketed running sum; frames bounded by
-the grid (24 hours of day, k types per day, a 99-value difference
-lattice) use one plain window or a self-join.
+(package docstring). KS, Kruskal-Wallis and Spearman cumulate through
+``running_sums``, the two-phase bucketed running sum. Anderson-Darling
+keeps one plain window over its per-cents frame on purpose: the helper
+reads its input twice, which would raise AD's parquet scans from 1 to 3
+(Brown-Forsythe's per-type cumulation in ``moments`` likewise, 2 to 3).
+Frames bounded by the grid (24 hours of day, k types per day, a 99-value
+difference lattice) use one plain window or a self-join.
 """
 
 from __future__ import annotations
@@ -20,7 +23,7 @@ _BUCKET = 2048  # cents per running-sum bucket; value domain [1, ~49100]
 
 
 def running_sums(df: DataFrame, order: str, *, by: tuple[str, ...] = (),
-                 width: int = _BUCKET, **sums: str) -> DataFrame:
+                 **sums: str) -> DataFrame:
     """``df`` plus, for each ``name=column``, the inclusive running sum of
     ``column`` in ``order`` within each ``by`` partition: the sum over the
     partition's rows whose integer ``order`` is at most this row's, so
@@ -28,13 +31,13 @@ def running_sums(df: DataFrame, order: str, *, by: tuple[str, ...] = (),
     the exclusive sum is ``name - column``.
 
     Two phases, so no window sorts a data-sized frame on one partition:
-    running sums within fixed-width ``bucket``s of ``order`` (a window
+    running sums within ``_BUCKET``-wide buckets of ``order`` (a window
     partitioned by bucket), plus each bucket's offset, the running sum of
     the bucket totals before it — a window over the small per-bucket
     summary, broadcast back. Fixed widths suit the bounded value domain;
     an open domain would take approx-quantile cuts instead."""
     keys = [*by, "bucket"]
-    b = df.withColumn("bucket", F.expr(f"{order} div {width}"))
+    b = df.withColumn("bucket", F.expr(f"{order} div {_BUCKET}"))
     within = (W.partitionBy(*keys).orderBy(order)
               .rangeBetween(W.unboundedPreceding, W.currentRow))
     local = b.select(*b.columns, *[F.sum(col).over(within).alias(f"_l_{n}")
@@ -47,7 +50,7 @@ def running_sums(df: DataFrame, order: str, *, by: tuple[str, ...] = (),
                                         F.lit(0)).alias(f"_o_{n}")
                              for n in sums]))
     return (local.join(F.broadcast(offs), keys)
-            .select(*b.columns, *[(F.col(f"_l_{n}") + F.col(f"_o_{n}"))
+            .select(*df.columns, *[(F.col(f"_l_{n}") + F.col(f"_o_{n}"))
                                   .alias(n) for n in sums]))
 
 

@@ -24,12 +24,12 @@ from ...tables import load_table
 from ..robust_trend import _MAX_POINTS, thin_series
 
 
-def hourly_spine_sql(filt: str = "TRUE") -> str:
-    """Dense (hour_idx, cnt) CTE body over events matching `filt`."""
-    return f"""
+def hourly_spine_sql() -> str:
+    """Dense (hr, c) CTE body: the oracle's hourly event-count series."""
+    return """
 h AS (
   SELECT cast(floor(epoch(ts) / 3600) AS bigint) AS hr, count(*) AS c
-  FROM events WHERE {filt} GROUP BY 1),
+  FROM events WHERE TRUE GROUP BY 1),
 b AS (SELECT min(hr) AS lo, max(hr) AS hi FROM h),
 spine AS (
   SELECT g.hr FROM b, lateral (

@@ -12,10 +12,10 @@ import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
-from redpanda_iceberg_duckdb_spark.operators.stats.rank import running_sums
+from redpanda_iceberg_duckdb_spark.operators.stats import rank
 from redpanda_iceberg_duckdb_spark.registry import all_queries
 
-_WIDTH = 4
+_WIDTH = 4  # stands in for rank._BUCKET, so small keys span many buckets
 
 # (partition, order key, t, u) rows. Keys repeat (ties), spread over
 # [-40, 200] with width-4 buckets (so most buckets are empty), and half
@@ -53,14 +53,16 @@ def _reference(rows, partitioned):
                ("c", 8, 2, 2), ("c", 40, 3, 0), ("c", -5, 1, 1)],
          partitioned=False)
 def test_running_sums_match_numpy_cumsum(spark, rows, partitioned):
-    """running_sums == a NumPy cumsum, with and without a partition key;
-    the bucket column the KS plan gate looks for stays in the output."""
+    """running_sums == a NumPy cumsum, with and without a partition key:
+    the input columns plus one inclusive sum per name."""
     df = spark.createDataFrame(rows, "p string, k long, t long, u long")
-    got = running_sums(df, "k", by=("p",) if partitioned else (),
-                       width=_WIDTH, cum_t="t", cum_u="u")
-    assert got.columns == ["p", "k", "t", "u", "bucket", "cum_t", "cum_u"]
-    assert sorted(tuple(r)[:4] + tuple(r)[5:] for r in got.collect()) \
-        == _reference(rows, partitioned)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(rank, "_BUCKET", _WIDTH)
+        got = rank.running_sums(df, "k", by=("p",) if partitioned else (),
+                                cum_t="t", cum_u="u")
+        assert got.columns == ["p", "k", "t", "u", "cum_t", "cum_u"]
+        assert sorted(map(tuple, got.collect())) \
+            == _reference(rows, partitioned)
 
 
 def test_pacf_keeps_caller_temp_view(spark, sf_smoke):
