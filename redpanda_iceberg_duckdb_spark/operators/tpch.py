@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..bounded import small_result
 from ..functions import davg, davg_sql, dmul_sum, dmul_sum_sql, dsum, dsum_sql
 from ..registry import register
 from ..tables import load_tables
@@ -52,10 +53,12 @@ ORDER BY l_returnflag, l_linestatus""",
 )
 def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: filtered scan -> 2-key hash aggregate, 8 aggregates.
-    The shipdate predicate reaches the parquet scan (PushedFilters)."""
+    The shipdate predicate reaches the parquet scan (PushedFilters). TPC-H
+    bounds the groups to the return-flag x line-status domain (at most 6),
+    so the result is sorted in one partition (``small_result``)."""
     t = load_tables(spark, sf_dir, "lineitem")
     li = t["lineitem"].filter(F.col("l_shipdate") <= F.lit("2000-09-02 00:00:00").cast("timestamp"))
-    return (
+    agg = (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(
             dsum("l_quantity", "sum_qty"),
@@ -70,8 +73,8 @@ def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
     )
+    return small_result(agg, "l_returnflag", "l_linestatus")
 
 
 @register(

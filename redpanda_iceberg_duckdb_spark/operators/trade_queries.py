@@ -8,17 +8,24 @@ Parity sources: Q1 /root/reference/duckdb/query_and_publish.py:107-122,
 Q2/Q3 /root/reference/duckdb/verify_iceberg.sql:4-16,
 Q4-Q6 /root/reference/validation/e2e.sh:158-206.
 
-Scale notes: all six are single-pass hash aggregates over one fact table —
-Catalyst plans partial (map-side) aggregation before the shuffle, so the
-shuffle carries one row per (partition x group), not per input row. Q5's
-order-by-limit plans as TakeOrderedAndProject (no global sort). At 100 TB the
-only knob that matters here is shuffle partition count, which AQE coalesces.
+Scale notes: all six are hash aggregates over one fact table; Catalyst plans
+partial (map-side) aggregation before the shuffle, so the shuffle carries one
+row per (partition x group), not per input row. Every result is bounded by
+the event-type domain, so each finishes in one partition through
+``bounded.small_result`` (``coalesce(1)``, no shuffle): Q1/Q3 sort that
+partition instead of planning a range exchange, Q4 and Q6 run their global
+aggregate over it with no second exchange, and Q6 derives all four of its
+values from one per-type pass over ``events``. Each query runs one map-stage
+job and one result job. The final task reads at most (map partitions x
+event types) partial-aggregate rows at any input size. Q5's order-by-limit
+plans as TakeOrderedAndProject (no global sort).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..bounded import small_result
 from ..functions import davg, davg_sql, iso_ts, iso_ts_sql
 from ..registry import register
 from ..tables import load_table
@@ -69,7 +76,7 @@ def _q1_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q1_trade_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group trade analytics (query_and_publish.py:107-122)."""
-    return _q1_df(spark, sf_dir).orderBy(F.desc("total_volume"))
+    return small_result(_q1_df(spark, sf_dir), F.desc("total_volume"))
 
 
 @register(
@@ -98,15 +105,12 @@ FROM events GROUP BY event_type ORDER BY total_volume DESC""",
 def q3_verification_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Group-by verification aggregate (verify_iceberg.sql:9-16)."""
     e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.col("event_type").alias("symbol"))
-        .agg(
-            F.count(F.lit(1)).alias("trade_count"),
-            davg("value", "avg_price"),
-            F.sum("user_id").alias("total_volume"),
-        )
-        .orderBy(F.desc("total_volume"))
+    agg = e.groupBy(F.col("event_type").alias("symbol")).agg(
+        F.count(F.lit(1)).alias("trade_count"),
+        davg("value", "avg_price"),
+        F.sum("user_id").alias("total_volume"),
     )
+    return small_result(agg, F.desc("total_volume"))
 
 
 @register(
@@ -120,7 +124,7 @@ FROM analytics""",
 )
 def q4_reaggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Re-aggregation of the analytics table (e2e.sh:158-164)."""
-    return _q1_df(spark, sf_dir).agg(
+    return small_result(_q1_df(spark, sf_dir)).agg(
         F.count(F.lit(1)).alias("analytics_rows"),
         F.sum("trade_count").alias("total_trades"),
     )
@@ -159,22 +163,21 @@ FROM ({_Q1_BODY_SQL}) analytics""",
     tags=("reference",),
 )
 def q6_summary_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """4-way UNION ALL summary (e2e.sh:182-206). Branches are built
-    separately and unioned in branch order (SURVEY.md section 2.11 caveat)."""
+    """4-way UNION ALL summary (e2e.sh:182-206) from one per-type pass over
+    ``events``. Over the per-type rows, COUNT(DISTINCT event_type) is
+    count(event_type) (the NULL group is not counted), the re-aggregated Q1
+    row count is count(*), and the trade and volume totals are sums of the
+    per-type partials. The trade total is coalesced to 0 because an empty
+    table has no groups to sum. Rows come out in branch order."""
     e = load_table(spark, sf_dir, "events")
-
-    def one(metric: str, value_col) -> DataFrame:
-        return e.agg(value_col.cast("string").alias("value")).select(
-            F.lit(metric).alias("metric"), "value"
-        )
-
-    analytics_rows = _q1_df(spark, sf_dir).agg(
-        F.count(F.lit(1)).cast("string").alias("value")
-    ).select(F.lit("Analytics Rows").alias("metric"), "value")
-
-    return (
-        one("Total Trades", F.count(F.lit(1)))
-        .unionAll(one("Unique Symbols", F.countDistinct("event_type")))
-        .unionAll(one("Total Volume", F.sum("user_id")))
-        .unionAll(analytics_rows)
+    per_type = small_result(e.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"), F.sum("user_id").alias("v")))
+    totals = per_type.agg(
+        F.coalesce(F.sum("n"), F.lit(0)).alias("Total Trades"),
+        F.count("event_type").alias("Unique Symbols"),
+        F.sum("v").alias("Total Volume"),
+        F.count(F.lit(1)).alias("Analytics Rows"),
     )
+    return totals.select(F.inline(F.array(*(
+        F.struct(F.lit(c).alias("metric"), F.col(f"`{c}`").cast("string").alias("value"))
+        for c in totals.columns))))
