@@ -39,6 +39,37 @@ _INFER_NTZ = "spark.sql.parquet.inferTimestampNTZ.enabled"
 # it is set only here and never in configure_session.
 _DATAFRAME_DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
 
+# Streaming metadata logs (source log, offsets, the file sink's
+# _spark_metadata, commits: four small files per micro-batch) go through
+# Spark's checkpoint file manager. The default one uses Hadoop FileContext,
+# which on a local filesystem without libhadoop (NativeIO unavailable)
+# resolves paths by forking a `readlink` process: 32 forks per
+# trade_pipeline cycle, and a 5-byte atomic write costs about 27 ms. The
+# FileSystem-based manager writes a temp file and renames it, 7.5 ms per
+# write and no `readlink`. FileSystemBasedCheckpointFileManager.renameTempFile
+# checks that the target is absent, then renames; what that rename gives:
+# - local filesystem: POSIX rename, atomic (one writer per checkpoint);
+# - HDFS: `rename` itself refuses an existing target, so a second writer of
+#   the same batch fails there even if it passed the check;
+# - object stores such as MinIO/S3: neither manager renames atomically; a
+#   rename is a copy + delete either way.
+_CHECKPOINT_FILE_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+
+# Runtime SQL confs every session needs, whether get_spark builds it or a
+# driver supplies it (configure_session). Shuffle width is not here: each
+# entry point sizes it on its own.
+_RUNTIME_CONF = {
+    # Oracle parity: timestamps mean the same instant as in DuckDB.
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    _NANOS_AS_LONG: "true",
+    _INFER_NTZ: "false",
+    _CHECKPOINT_FILE_MANAGER: "org.apache.spark.sql.execution.streaming."
+                              "checkpointing.FileSystemBasedCheckpointFileManager",
+}
+
 
 def get_spark(app_name: str = "redpanda_iceberg_duckdb_spark", *, cpus: int | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
@@ -52,13 +83,8 @@ def get_spark(app_name: str = "redpanda_iceberg_duckdb_spark", *, cpus: int | No
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(max(cpus, 4)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=_RUNTIME_CONF)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(_NANOS_AS_LONG, "true")
-        .config(_INFER_NTZ, "false")
         .config(_DATAFRAME_DEBUGGING, "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
@@ -111,7 +137,8 @@ def configure_session(spark: SparkSession) -> SparkSession:
     (the driver passes its own SparkSession to ``entry``/``queries`` callables).
 
     Static configs (driver memory, master) can't change here; the ones that
-    matter for oracle parity (timezone) and plan quality (AQE) can.
+    matter for oracle parity (timezone), plan quality (AQE) and streaming
+    checkpoint writes (the checkpoint file manager) can: ``_RUNTIME_CONF``.
 
     Every ``spark.conf.set`` — even to the current value — bumps the session
     state and drops Spark's parsed/analyzed-plan and codegen caches, which
@@ -121,12 +148,7 @@ def configure_session(spark: SparkSession) -> SparkSession:
     """
     try:
         wanted = {
-            "spark.sql.session.timeZone": "UTC",
-            "spark.sql.adaptive.enabled": "true",
-            "spark.sql.adaptive.coalescePartitions.enabled": "true",
-            "spark.sql.adaptive.skewJoin.enabled": "true",
-            _NANOS_AS_LONG: "true",
-            _INFER_NTZ: "false",
+            **_RUNTIME_CONF,
             # Size the shuffle to the session's actual parallelism instead of
             # the 200-partition default — on the driver's small local session
             # that default means ~25 near-empty tasks per core per exchange.

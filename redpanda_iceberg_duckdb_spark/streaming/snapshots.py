@@ -75,10 +75,13 @@ def table_path(base: str, version: int, table: str = "") -> str:
 def commit(base: str, version: int, tables: Mapping[str, DataFrame]) -> None:
     """Write each table of ``version`` with its recorded schema, then flip
     the pointer. Schemas are written after the data because an overwrite
-    clears the directory first."""
+    clears the directory first. No ``_SUCCESS`` marker: the pointer flip
+    is the commit marker, and skipping it saves two `chmod` forks."""
     for table, df in tables.items():
         path = table_path(base, version, table)
-        df.write.mode("overwrite").parquet(path)
+        (df.write.mode("overwrite")
+         .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+         .parquet(path))
         with open(os.path.join(path, SCHEMA_FILE), "w") as f:
             f.write(df.schema.json())
     tmp = os.path.join(base, POINTER + ".tmp")

@@ -326,6 +326,30 @@ def test_configure_session_never_sets_static_debugging_conf(spark):
     assert calls and _DATAFRAME_DEBUGGING not in calls, calls
 
 
+def test_configure_session_sets_checkpoint_file_manager(spark):
+    """A driver-supplied session gets the FileSystem-based streaming
+    checkpoint manager too: it is a runtime conf in the shared table."""
+    from redpanda_iceberg_duckdb_spark.session import configure_session
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    assert spark.conf.get(key).endswith("FileSystemBasedCheckpointFileManager")
+    sets = {}
+
+    class UnconfiguredConf:
+        def get(self, key, default=None):
+            return default
+
+        def set(self, key, value):
+            sets[key] = value
+
+    class Wrapper:
+        conf = UnconfiguredConf()
+        sparkContext = spark.sparkContext
+
+    configure_session(Wrapper())
+    assert sets[key] == spark.conf.get(key)
+
+
 def test_no_hugeint_oracle_outputs(spark, sf_smoke):
     """The driver's value hash is TYPE-sensitive: DuckDB widens sum(BIGINT)
     to HUGEINT, which hash-mismatches Spark's bigint even when every value

@@ -31,6 +31,18 @@ def _commit_one(spark, base):
     return snapshots.table_path(base, 1)
 
 
+def test_commit_writes_data_and_schema_only(spark, tmp_path):
+    """The pointer flip is the commit marker, so a version directory holds
+    no _SUCCESS file: only part files, their .crc files and _schema.json."""
+    path = _commit_one(spark, str(tmp_path / "snap"))
+    names = os.listdir(path)
+    assert snapshots.SCHEMA_FILE in names
+    assert any(n.startswith("part-") for n in names)
+    assert all(n == snapshots.SCHEMA_FILE or n.startswith("part-")
+               or (n.startswith(".part-") and n.endswith(".crc"))
+               for n in names), names
+
+
 def test_version_file_missing_recorded_column_raises(spark, tmp_path):
     base = str(tmp_path / "snap")
     path = _commit_one(spark, base)

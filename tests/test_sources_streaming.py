@@ -96,6 +96,67 @@ def test_streaming_ingest_end_to_end(spark, tmp_path):
     assert spark.read.parquet(out).count() == 100
 
 
+def _trade_json_stream(spark, src):
+    schema = T.StructType([T.StructField("trade_id", T.LongType()),
+                           T.StructField("symbol", T.StringType())])
+    raw = ingest.read_json_stream(spark, str(src), schema,
+                                  max_files_per_trigger=1)
+    good, _bad = ingest.validate_stream(raw, ["trade_id", "symbol"])
+    return good
+
+
+def _write_trades(src, name, ids):
+    (src / name).write_text("\n".join(
+        json.dumps({"trade_id": i, "symbol": "AAPL"}) for i in ids))
+
+
+def test_streaming_checkpoint_uses_filesystem_manager(spark, tmp_path):
+    """Every session writes its streaming metadata logs through the
+    FileSystem-based checkpoint manager (session.py): the FileContext
+    default forks `readlink` per path on a filesystem without libhadoop."""
+    src = tmp_path / "in"
+    src.mkdir()
+    _write_trades(src, "part-0.json", range(3))
+    q = ingest.start_ingest(_trade_json_stream(spark, src),
+                            out_path=str(tmp_path / "out"),
+                            checkpoint=str(tmp_path / "ckpt"),
+                            available_now=True)
+    q.awaitTermination(120)
+    manager = q._jsq.streamingQuery().offsetLog().fileManager()
+    assert manager.getClass().getName().endswith(
+        "FileSystemBasedCheckpointFileManager")
+
+
+def test_ingest_exactly_once_after_crash_before_commit(spark, tmp_path):
+    """A crash after the offset log and the sink write but before the
+    commit log: the restart replays the last batch, and the file sink's
+    _spark_metadata log skips it, so no row lands twice. New input after
+    that is appended exactly once."""
+    src, out, ckpt = tmp_path / "in", str(tmp_path / "out"), tmp_path / "ckpt"
+    src.mkdir()
+    _write_trades(src, "part-0.json", range(0, 10))
+    _write_trades(src, "part-1.json", range(10, 25))
+
+    def run():
+        q = ingest.start_ingest(_trade_json_stream(spark, src), out_path=out,
+                                checkpoint=str(ckpt), available_now=True)
+        q.awaitTermination(120)
+        assert q.exception() is None
+        return sorted(r.trade_id for r in spark.read.parquet(out).collect())
+
+    assert run() == list(range(25))
+    commits = ckpt / "commits"
+    assert sorted(f.name for f in commits.iterdir() if f.name.isdigit()) \
+        == ["0", "1"]
+    # A crash before the commit leaves neither the file nor its checksum.
+    (commits / "1").unlink()
+    (commits / ".1.crc").unlink(missing_ok=True)
+    assert run() == list(range(25))  # replayed batch 1 wrote nothing
+    assert (commits / "1").exists()  # the restart did replay it
+    _write_trades(src, "part-2.json", range(25, 32))
+    assert run() == list(range(32))
+
+
 def _drain_to_memory(spark, sdf, name):
     q = (sdf.writeStream.format("memory").queryName(name)
          .outputMode("complete").trigger(availableNow=True).start())
