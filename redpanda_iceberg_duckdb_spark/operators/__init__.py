@@ -33,7 +33,6 @@ from . import (  # noqa: F401
     lexicon,         # vocab growth / novelty / entropy / modal tokens
     profiling,       # single-scan column profile, weighted quantiles
     curation,        # mixture allocation, filter funnel, top-p, sampling
-    timeseries,      # hourly gap-fill / interpolation / moving stats
     robust,          # MAD outliers, chi-square independence
     scale_patterns,  # two-phase distinct, runtime filters, ntile, Benford
     skewed,          # hot-key join correctness query (AQE skew regime)
@@ -66,19 +65,15 @@ from . import (  # noqa: F401
     sketches9,       # mergeable sliding-window HLL (register-wise max)
     coverage9,       # greedy max-coverage data selection (submodular)
     contrastive9,    # hard-negative mining with positive-negative margins
-    m4_downsample,   # M4 pixel-bucket series reduction (VLDB 2014)
     experiment_stats,  # CUPED variance-reduced A/B readout (WSDM 2013)
     ivm,             # join-delta incremental view maintenance (SIGMOD 1986)
     pca_power,       # Gramian sufficient-stats PCA + power iteration
     ablation,        # leave-one-source-out metric deltas, one scan
     seqmine,         # first-occurrence precedence support pairs
-    robust_trend,    # Theil-Sen median-of-pairwise-slopes trend
-    changepoint,     # CUSUM via the prefix-min window identity
     quantile_norm,   # pooled-order-statistic quantile normalization
     target_encoding,  # out-of-fold smoothed target encoding
     auc_eval,        # exact Mann-Whitney AUC, two-phase ranks
     survival,        # Kaplan-Meier product-limit curve
-    forecast_eval,   # MASE seasonal-naive backtest
     offpolicy,       # IPS/SNIPS counterfactual policy value
     data_quality,    # one-pass Deequ-style constraint suite
     ivm_stream,      # recurring IVM refresh through the foreachBatch sink
@@ -95,7 +90,6 @@ from . import (  # noqa: F401
     cdcdiff10,       # snapshot diff -> insert/update/delete changelog
     experiment10,    # difference-in-differences + Qini uplift deciles
     valuation10,     # exact 3-group Shapley data valuation
-    timeseries10,    # dense-spine hourly ACF + purchase/view lead-lag CCF
     retrieval10b,    # NDCG@10 with integer fixed-point log discounts
     sampling10b,     # Neyman allocation, exact largest-remainder split
     attribution10,   # U-shaped multi-touch attribution, integer credits
@@ -111,7 +105,6 @@ from . import (  # noqa: F401
     mixture10b,      # alpha=1/2 temperature mixture, exact apportionment
     sprt10,          # Wald SPRT sequential decision on micro-nat lattice
     shard10,         # rendezvous-hashing shard audit (minimal disruption)
-    binseg10,        # depth-2 binary segmentation, division-free argmax
     sprt_stream,     # SPRT gate maintained across streaming micro-batches
     similarity11,    # banded random-hyperplane LSH cosine near-dups
     pq11,            # product-quantization encode + distortion audit
@@ -134,10 +127,8 @@ from . import (  # noqa: F401
     lm12,            # bigram-LM perplexity quality filter (micro-nats)
     richness12,      # Chao1 + Good-Turing from frequency-of-frequencies
     survival12,      # Nelson-Aalen cumulative hazard (nano lattice)
-    sax12,           # SAX symbolic discretization + 3-symbol motifs
     corr12,          # one-pass Pearson correlation matrix (exact moments)
     sampling12,      # skip-gram count^0.75 negative-sampling table
-    wavelet12,       # Haar energy decomposition, one-shuffle transform
     ridge12,         # ridge regression via exact Cramer on one moment row
     glm12,           # logistic first Newton/IRLS step on exact moments
     circular12,      # circular time-of-day stats (trig as shared literals)
@@ -145,7 +136,6 @@ from . import (  # noqa: F401
     funnel_stream,   # incrementally-maintained ordered funnel (replay)
     infotheory12,    # Markov entropy rate on the micro-nat lattice
     lm13,            # interpolated Kneser-Ney bigram perplexity by source
-    timeseries13,    # Holt linear level+trend on the micro lattice
     ot13,            # exact 1-D / circular Wasserstein distances
     multimodal13,    # WAV/PCM decode-and-measure (audio modality)
     cox13,           # Cox proportional hazards, Newton to convergence
@@ -158,8 +148,6 @@ from . import (  # noqa: F401
     novelty13,       # content-novelty curve (diminishing returns)
     logrank13,       # log-rank test (Cox's score-test companion)
     boost13,         # two-round boosted stumps on exact residual lattice
-    dtw13,           # dynamic time warping on the hour-profile grid
-    stl13,           # trend/seasonality strength (variance decomposition)
     burst13,         # token burstiness cf/df (template-spam signal)
     hapax13,         # hapax share + TTR per source (lexical richness)
     wav_ingest14,    # WAV dead-letter ingest replay (audio St5)
@@ -169,7 +157,6 @@ from . import (  # noqa: F401
     rouge14,         # ROUGE-2 multiset overlap on LSH candidate pairs
     ot14,            # sliced-Wasserstein between label embedding slices
     diversity14,     # self-BLEU-2 per source (pairwise-free clipping)
-    timeseries14,    # Holt-Winters additive seasonal (shift-register CTE)
     variant14,       # Spark 4 VARIANT parse-once typed extraction
     luhn14,          # Luhn mod-10 check-digit audit (PII validator)
     tws15,           # transformWithState dedup replay (state API v2)
@@ -177,7 +164,6 @@ from . import (  # noqa: F401
     embed15,         # linear CKA between embedding dim-halves
     sinkhorn15,      # entropic OT plan (shared generated iteration)
     rater15,         # Krippendorff alpha (missing-rating agreement)
-    spectral15,      # DFT periodogram on the 1e6 trig lattice
     lm15,            # speculative acceptance + beam-search decode
     causal15,        # stratified ATT on a pre-treatment covariate
     linkage15,       # Fellegi-Sunter match/unmatch field weights
@@ -193,4 +179,10 @@ from .stats import (  # noqa: F401,E402
     rank,            # KS, Anderson-Darling, Kruskal-Wallis, Spearman
     resampling,      # md5-seeded permutation test, BH FDR
     series,          # Ljung-Box, Page-Hinkley, Kendall, Granger, PACF
+)
+from .timeseries import (  # noqa: F401,E402
+    regularize,      # gap fill, moving stats, EWMA, sliding distinct, M4
+    forecast,        # Holt, Holt-Winters, MASE, trend/seasonal strength
+    shape,           # ACF, CCF, periodogram, Haar energy, SAX, DTW
+    change,          # CUSUM, binary segmentation, Theil-Sen
 )

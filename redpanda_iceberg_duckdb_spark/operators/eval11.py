@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from ..registry import register
 from ..tables import load_table
+from .timeseries.hourly import hourly_counts, micros_hour
 
 _SEASON = 24
 _TAUS10 = (1, 5, 9)     # tau * 10
@@ -170,10 +171,8 @@ def pinball_loss_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     24-hour seasonal-naive forecast at tau = 0.1/0.5/0.9 — integer
     residuals, tau carried x10 so each term is exact, one division
     (module docstring)."""
-    e = load_table(spark, sf_dir, "events")
-    hourly = (e.groupBy("event_type",
-                        F.expr("unix_micros(ts) div 3600000000").alias("h"))
-              .agg(F.count(F.lit(1)).alias("c")))
+    hourly = hourly_counts(load_table(spark, sf_dir, "events"),
+                           micros_hour(), "event_type")
     a = hourly.select("event_type", "h", F.col("c").alias("y"))
     b = hourly.select("event_type", (F.col("h") + _SEASON).alias("h"),
                       F.col("c").alias("f"))
@@ -217,10 +216,8 @@ def fano_factor_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hourly count series per type — Fano = 1 for a Poisson stream,
     > 1 = bursty/overdispersed; exact integer moments, one division
     chain (module docstring)."""
-    e = load_table(spark, sf_dir, "events")
-    hourly = (e.groupBy("event_type",
-                        F.expr("unix_micros(ts) div 3600000000").alias("h"))
-              .agg(F.count(F.lit(1)).alias("c")))
+    hourly = hourly_counts(load_table(spark, sf_dir, "events"),
+                           micros_hour(), "event_type")
     agg = (hourly.groupBy("event_type")
            .agg(F.count(F.lit(1)).alias("n"),
                 F.sum("c").cast("long").alias("s"),

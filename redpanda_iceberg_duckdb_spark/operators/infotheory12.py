@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from ..registry import register
 from ..tables import load_table
+from .timeseries.hourly import (grid_sql, hourly_counts, micros_hour,
+                               zero_filled)
 
 _ENT_ORACLE = """
 WITH p AS (
@@ -84,15 +86,7 @@ def markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("src"))
 
 
-_PERM_ORACLE = f"""
-WITH hc AS (SELECT epoch_us(ts) // {3_600_000_000} AS h,
-                   cast(count(*) AS bigint) AS c
-            FROM events GROUP BY 1),
-b AS (SELECT min(h) AS h0, max(h) AS h1 FROM hc),
-grid AS (SELECT g.h, coalesce(hc.c, 0) AS c
-         FROM (SELECT unnest(generate_series((SELECT h0 FROM b),
-                                             (SELECT h1 FROM b))) AS h) g
-         LEFT JOIN hc ON hc.h = g.h),
+_PERM_ORACLE = f"""{grid_sql()},
 tri AS (SELECT c AS c1, lead(c, 1) OVER (ORDER BY h) AS c2,
                lead(c, 2) OVER (ORDER BY h) AS c3
         FROM grid),
@@ -129,14 +123,8 @@ def permutation_entropy_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln(6)-ish = white noise. Normalization uses ln(8), the code-space
     size under this tie rule. One hour-bucket aggregate; everything else
     runs on the time-range-bounded grid."""
-    ev = load_table(spark, sf_dir, "events")
-    hour_us = 3_600_000_000
-    hc = (ev.select(F.expr(f"unix_micros(ts) div {hour_us}").alias("h"))
-          .groupBy("h").agg(F.count(F.lit(1)).cast("long").alias("c")))
-    b = hc.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
-    grid = (b.select(F.explode(F.sequence("h0", "h1")).alias("h"))
-            .join(hc, "h", "left_outer")
-            .select("h", F.coalesce("c", F.lit(0)).alias("c")))
+    grid = zero_filled(hourly_counts(load_table(spark, sf_dir, "events"),
+                                     micros_hour()))
     wl = W.orderBy("h")
     tri = grid.select(F.col("c").alias("c1"),
                       F.lead("c", 1).over(wl).alias("c2"),

@@ -256,8 +256,8 @@ def ols_hourly_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     start from identical inputs in both engines. At 100 TB this is the
     map-side-combinable trend over any number of series: one aggregate
     per series, no sort, no window over raw events."""
-    from .timeseries import _filled_grid
-    g = _filled_grid(spark, sf_dir).select(
+    from .timeseries.hourly import filled_grid
+    g = filled_grid(spark, sf_dir).select(
         "event_type", F.col("rn").alias("x"), F.col("n_events").alias("y"))
     m = (g.groupBy("event_type")
          .agg(F.count(F.lit(1)).alias("n"),

@@ -10,9 +10,8 @@
 - ``resampling``: md5-seeded permutation and block-randomization tests
   (the permutation test, Benjamini-Hochberg FDR);
 - ``series``: tests on the hourly event-count series (Mann-Kendall, runs,
-  Ljung-Box, Page-Hinkley, Kendall tau-b, Granger, PACF) and the dense
-  zero-filled hourly builder that timeseries10's ACF and cross-correlation
-  share.
+  Ljung-Box, Page-Hinkley, Kendall tau-b, Granger, PACF), which
+  ``timeseries.hourly`` builds.
 
 Every query is checked exactly against a DuckDB oracle, so each one keeps
 the float operations the two engines see identical. The rules:

@@ -2,99 +2,32 @@
 Wald-Wolfowitz runs test, the Ljung-Box portmanteau, Page-Hinkley drift,
 Kendall tau-b, a lag-1 Granger F-test and the partial autocorrelation.
 
-The series is dense (``dense_hourly``): one row per hour from the first
-to the last event hour, missing hours are true zeros. Centering rides
-the N-scaled deviation ``z_t = n * c_t - S``, an exact bigint, so every
-lag's covariance numerator and the variance denominator are exact integer
-sums (package docstring for the lattice rules). Each test works on the
-hour grid, whose size is bounded by the time range, not the corpus; the
-windows and pair joins here run over that grid.
+The series comes from ``timeseries.hourly``: ``dense_hourly`` holds one
+row per hour from the first to the last event hour, missing hours are
+true zeros. Centering rides the N-scaled deviation ``z_t = n * c_t - S``,
+an exact bigint, so every lag's covariance numerator and the variance
+denominator are exact integer sums (package docstring for the lattice
+rules). Each test works on the hour grid, whose size is bounded by the
+time range, not the corpus; the windows and pair joins here run over
+that grid.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-from operator import or_
-
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ...registry import register
 from ...tables import load_table
-from ..robust_trend import _MAX_POINTS, thin_series
-
-
-def hourly_spine_sql() -> str:
-    """Dense (hr, c) CTE body: the oracle's hourly event-count series."""
-    return """
-h AS (
-  SELECT cast(floor(epoch(ts) / 3600) AS bigint) AS hr, count(*) AS c
-  FROM events WHERE TRUE GROUP BY 1),
-b AS (SELECT min(hr) AS lo, max(hr) AS hi FROM h),
-spine AS (
-  SELECT g.hr FROM b, lateral (
-    SELECT unnest(generate_series(b.lo, b.hi)) AS hr) g),
-d AS (
-  SELECT s.hr, coalesce(h.c, 0) AS c FROM spine s LEFT JOIN h USING (hr))"""
-
-
-def dense_hourly(spark: SparkSession, sf_dir: str, *,
-                 checkpoint: bool = False, **counts: Column) -> DataFrame:
-    """(hr, <name>...): one row per hour from the first to the last hour
-    holding an event that matches any of the named conditions, and per
-    name the count of events matching its condition in that hour (0 when
-    none). ``dense_hourly(spark, sf_dir, c=F.lit(True))`` is the series of
-    all events.
-
-    With ``checkpoint``, the per-hour counts (one events scan, O(hours)
-    rows) are eagerly localCheckpointed before the spine is built: a
-    caller that reads the series from several branches then scans events
-    once, not once per branch."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        reduce(or_, counts.values()))
-    h = (ev.groupBy(F.floor(F.unix_timestamp("ts") / 3600).cast("long")
-                    .alias("hr"))
-         .agg(*[F.count(F.when(cond, 1)).alias(name)
-                for name, cond in counts.items()]))
-    if checkpoint:
-        h = h.localCheckpoint(eager=True)
-    spine = (h.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
-             .select(F.explode(F.sequence("lo", "hi")).alias("hr")))
-    return (spine.join(h, "hr", "left")
-            .select("hr", *[F.coalesce(name, F.lit(0)).alias(name)
-                            for name in counts]))
-
-
-def lag_products(za: DataFrame, zb: DataFrame, lags) -> DataFrame:
-    """(lag, n_pairs, numer): for each lag, the count and the sum of
-    za(t) * zb(t + lag) over the hours both frames hold; ``za`` and ``zb``
-    are (hr, z) frames. One equi-join on hr + lag with the lag list
-    exploded on the probe side — no window over a global order."""
-    probe = (za.select("hr", F.col("z").alias("za"))
-             .withColumn("lag", F.explode(F.array(*[F.lit(k) for k in lags])))
-             .withColumn("hr_b", F.col("hr") + F.col("lag")))
-    return (probe.join(zb.select(F.col("hr").alias("hr_b"),
-                                 F.col("z").alias("zb")), "hr_b")
-            .groupBy("lag")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"),
-                 F.sum(F.col("za") * F.col("zb")).alias("numer")))
-
-
-def centered(d: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(z, t): the (hr, n, z) N-scaled deviations of the series column c,
-    and the 1-row (n, s) frame they are centered on."""
-    t = d.agg(F.count(F.lit(1)).cast("long").alias("n"),
-              F.sum("c").cast("long").alias("s"))
-    z = (d.crossJoin(F.broadcast(t))
-         .select("hr", "n", (F.col("n") * F.col("c") - F.col("s"))
-                 .alias("z")))
-    return z, t
+from ..timeseries.hourly import (_MAX_POINTS, centered, dense_hourly,
+                                 hourly_counts, hourly_spine_sql,
+                                 lag_products, micros_hour, thin_series)
 
 
 # ---------------------------------------------------------- Mann-Kendall
 
 # Thinned hourly counts per event type — identical arithmetic to
-# robust_trend's oracle, so the guard can never fork.
+# theilsen_hourly_trend's oracle, so the guard can never fork.
 _HOURLY_THINNED = f"""
 hourly0 AS (
   SELECT event_type, epoch_us(ts) // 3600000000 AS h, count(*) AS c
@@ -148,15 +81,13 @@ FROM v ORDER BY event_type"""
 def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, n_points, s_stat, var_s18, z_mk): Mann-Kendall trend
     test per event type over the hourly count series, thinned to at most
-    2048 points per series (robust_trend.thin_series, the same guard the
+    2048 points per series (hourly.thin_series, the same guard the
     oracle mirrors). S comes from exact sign pairs; the tie-corrected
     variance n(n-1)(2n+5) - sum t(t-1)(2t+5) is carried x18 as an integer;
     one division by 18 and one sqrt give the continuity-corrected z."""
-    e = load_table(spark, sf_dir, "events")
     hourly = thin_series(
-        (e.groupBy("event_type",
-                   F.expr("unix_micros(ts) div 3600000000").alias("h"))
-         .agg(F.count(F.lit(1)).alias("c"))),
+        hourly_counts(load_table(spark, sf_dir, "events"), micros_hour(),
+                      "event_type"),
         "event_type", "h")
     a = hourly.select("event_type", F.col("h").alias("h1"),
                       F.col("c").alias("c1"))
@@ -229,10 +160,7 @@ def runs_test_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-median ties dropped — both stated identically in each engine.
     The complement of Mann-Kendall: MK detects monotone trend, runs detect
     any serial structure."""
-    hour_us = 3_600_000_000
-    ev = load_table(spark, sf_dir, "events")
-    hc = (ev.select(F.expr(f"unix_micros(ts) div {hour_us}").alias("h"))
-          .groupBy("h").agg(F.count(F.lit(1)).cast("long").alias("c")))
+    hc = hourly_counts(load_table(spark, sf_dir, "events"), micros_hour())
     # lower median via sorted array of (c, h) — grid-sized
     med = (hc.agg(F.array_sort(F.collect_list(F.struct("c", "h")))
                   .alias("a"))

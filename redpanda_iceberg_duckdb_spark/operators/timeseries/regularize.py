@@ -1,87 +1,28 @@
-"""Time-series regularization over ``events``: dense hourly resampling with
-zero-fill, forward-fill, and linear interpolation, plus trailing moving
-statistics over the regular grid.
+"""Regularizing the event stream: the dense hourly grid with zero-fill,
+forward-fill and linear interpolation, trailing moving statistics and
+an EWMA over it, sliding distinct users, and M4 downsampling.
 
-These are the operators that turn an irregular event stream into the regular
-series a forecasting/feature pipeline consumes. The irregular->regular step
-is where naive implementations go quadratic or driver-side; here the grid is
-generated from ONE global min/max row (`sequence` + explode), the event data
-is reduced to (type, hour) aggregates BEFORE any window runs, and every
-window partition is |hours per type| — bounded by calendar time, not by data
-volume, so the same plan holds at 100 TB.
-
-Determinism: grid positions are integer row indexes over the dense grid
-(consecutive hours), so fill/interpolation distances are exact integers;
-interpolated values are IEEE ops over identically-rounded doubles in both
-engines.
-
-Reference parity: the reference has no time-series surface (closest is the
-minute-bucket GROUP BY in /root/reference/duckdb/query_and_publish.py:115);
-additive coverage per the build brief.
+The grid (``hourly.filled_grid``) reduces events to (type, hour)
+aggregates before any window runs, so every window partition holds the
+hours of one type: bounded by calendar time, not by data volume. Grid
+positions are integer row indexes, so fill and interpolation distances
+are exact integers.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from ..registry import register
-from ..tables import load_table
-
-
-def _hourly_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dense (event_type, hour) grid from the global [min, max] hour span:
-    one single-row global aggregate, sequence-exploded, cross-joined with
-    the distinct type dimension (both broadcast-sized)."""
-    e = load_table(spark, sf_dir, "events")
-    hr = F.date_trunc("hour", F.col("ts"))
-    bounds = e.agg(F.min(hr).alias("h0"), F.max(hr).alias("h1"))
-    hours = bounds.select(
-        F.explode(F.expr("sequence(h0, h1, interval 1 hour)")).alias("hour"))
-    types = e.select("event_type").distinct()
-    return hours.crossJoin(types)
-
-
-_GRID_CTE_DUCK = """
-b AS (SELECT date_trunc('hour', min(ts)) AS h0,
-             date_trunc('hour', max(ts)) AS h1 FROM events),
-g AS (SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour FROM b),
-ty AS (SELECT DISTINCT event_type FROM events),
-c AS (SELECT event_type, date_trunc('hour', ts) AS hour,
-             count(*) AS n, round(avg(value), 6) AS v
-      FROM events GROUP BY 1, 2),
-grid AS (
-  SELECT ty.event_type, g.hour,
-         coalesce(c.n, 0) AS n_events, c.v,
-         row_number() OVER (PARTITION BY ty.event_type
-                            ORDER BY g.hour) AS rn
-  FROM g CROSS JOIN ty
-  LEFT JOIN c ON c.event_type = ty.event_type AND c.hour = g.hour)
-"""
-
-
-def _filled_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grid left-joined with per-(type, hour) aggregates: zero-filled counts,
-    nullable rounded hourly mean, and an integer grid position `rn`."""
-    e = load_table(spark, sf_dir, "events")
-    agg = (e.groupBy("event_type",
-                     F.date_trunc("hour", F.col("ts")).alias("hour"))
-           .agg(F.count(F.lit(1)).alias("n"),
-                F.round(F.avg("value"), 6).alias("v")))
-    grid = _hourly_grid(spark, sf_dir)
-    return (grid.join(agg, ["event_type", "hour"], "left")
-            .select("event_type", "hour",
-                    F.coalesce(F.col("n"), F.lit(0)).alias("n_events"),
-                    "v",
-                    F.row_number().over(
-                        W.partitionBy("event_type").orderBy("hour"))
-                    .alias("rn")))
+from ...registry import register
+from ...tables import load_table
+from .hourly import FILLED_GRID_SQL, filled_grid, trunc_hour
 
 
 @register(
     "gap_fill_hourly",
     bench=True,
     oracle=f"""
-WITH {_GRID_CTE_DUCK},
+WITH {FILLED_GRID_SQL},
 f AS (
   SELECT event_type, hour, n_events, v, rn,
          last_value(v IGNORE NULLS) OVER w_prev AS pv,
@@ -111,10 +52,8 @@ def gap_fill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     observed hourly mean, and `interp_avg` linearly interpolates between
     the nearest observed hours (null before the first / after the last
     observation). Fill distances use the integer grid index, so the
-    interpolation fraction is an exact small-int ratio. The event table is
-    reduced to (type, hour) BEFORE the windows run — the fill windows scan
-    |hours| rows per type, never raw events."""
-    g = _filled_grid(spark, sf_dir)
+    interpolation fraction is an exact small-int ratio."""
+    g = filled_grid(spark, sf_dir)
     w_prev = (W.partitionBy("event_type").orderBy("rn")
               .rowsBetween(W.unboundedPreceding, -1))
     w_next = (W.partitionBy("event_type").orderBy("rn")
@@ -139,7 +78,7 @@ def gap_fill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "hourly_moving_stats",
     oracle=f"""
-WITH {_GRID_CTE_DUCK}
+WITH {FILLED_GRID_SQL}
 SELECT event_type, hour, n_events,
        cast(sum(n_events) OVER w AS bigint) AS moving_sum_24h,
        round(sum(n_events) OVER w * 1.0 / count(*) OVER w, 6)
@@ -157,8 +96,8 @@ def hourly_moving_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ZERO-FILLED grid — computing moving stats over the raw (sparse)
     hourly rollup silently skips empty hours and overstates activity; the
     dense grid makes the window truly calendar-24h. Integer sums with an
-    exact row-count divisor; partitions are |hours per type|."""
-    g = _filled_grid(spark, sf_dir)
+    exact row-count divisor."""
+    g = filled_grid(spark, sf_dir)
     w = (W.partitionBy("event_type").orderBy("rn").rowsBetween(-23, 0))
     return (g.select(
                 "event_type", "hour", "n_events",
@@ -174,7 +113,7 @@ def hourly_moving_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ewma_hourly_counts",
     oracle=f"""
-WITH {_GRID_CTE_DUCK},
+WITH {FILLED_GRID_SQL},
 win AS (
   SELECT event_type, hour, n_events,
          list(n_events) OVER (PARTITION BY event_type ORDER BY rn
@@ -191,16 +130,13 @@ FROM win ORDER BY event_type, hour""",
 def ewma_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially weighted moving average (alpha = 1/2) of the hourly
     event count, truncated to a 16-hour window and renormalized by the
-    truncated weight mass. The weights are powers of two, the inputs are
-    integers, and every product/sum is therefore an exact dyadic rational in
-    IEEE doubles — summation order cannot change the result, so Spark and
-    DuckDB produce bit-identical smoothed values with NO rounding step.
-    (An untruncated recursive EWMA is a sequential fold — not expressible as
-    a distributed window without losing that exactness; the 16-term tail
-    carries weight 2^-16, far below any downstream signal.)
-    Plan: the window runs over the dense grid (hours x types), never raw
-    events; collect_list holds <= 16 integers per row."""
-    g = _filled_grid(spark, sf_dir)
+    truncated weight mass. The weights are powers of two and the inputs
+    integers, so every product and sum is an exact dyadic rational in
+    IEEE doubles: summation order cannot change the result, and both
+    engines agree bit for bit with no rounding step. (An untruncated
+    recursive EWMA is a sequential fold; the 16-term tail carries weight
+    2^-16.) collect_list holds <= 16 integers per row."""
+    g = filled_grid(spark, sf_dir)
     w = (W.partitionBy("event_type").orderBy("rn").rowsBetween(-15, 0))
     arr = F.collect_list("n_events").over(w)
     with_arr = g.select("event_type", "hour", "n_events", arr.alias("l"))
@@ -231,16 +167,14 @@ ORDER BY h.hour""",
 def sliding_distinct_users_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact trailing-24-hour distinct users per hour (the sliding-DAU
     metric). COUNT(DISTINCT) OVER a sliding frame does not exist in either
-    engine; the naive range join of every hour against every (hour, user)
-    pair is O(|hours| * |pairs|). The scale shape used here: reduce events
-    to distinct (hour, user) pairs once, then EXPLODE each pair into the
-    <= 24 window endpoints it covers — a bounded 24x fan-out of the
-    hour-level rollup (not of raw events) that turns the range join into a
-    plain hash aggregate. The oracle cross-checks with the literal range
-    join, proving the expansion covers exactly the right windows."""
+    engine, and the naive range join of every hour against every (hour,
+    user) pair is O(|hours| * |pairs|). Instead: reduce events to distinct
+    (hour, user) pairs once, then EXPLODE each pair into the <= 24 window
+    endpoints it covers — a bounded 24x fan-out of the hour-level rollup
+    that turns the range join into a plain hash aggregate. The oracle
+    keeps the literal range join."""
     e = load_table(spark, sf_dir, "events")
-    p = (e.select(F.date_trunc("hour", "ts").alias("hour"), "user_id")
-         .distinct())
+    p = e.select(trunc_hour().alias("hour"), "user_id").distinct()
     hours = p.select("hour").distinct()
     max_hour = hours.agg(F.max("hour").alias("mx"))
     covered = (p.select(
@@ -255,3 +189,82 @@ def sliding_distinct_users_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (observed.groupBy(F.col("target_hour").alias("hour"))
             .agg(F.countDistinct("user_id").alias("n_users_24h"))
             .orderBy("hour"))
+
+
+# ---------------------------------------------------------------- M4
+
+_W = 48  # pixel-column buckets per series
+
+
+def _m4_oracle() -> str:
+    # Struct field order matters: {'u','e','v'} compares (us, event_id)
+    # first — identical to the Spark struct below.
+    return f"""
+WITH pts AS (
+  SELECT event_type, epoch_us(ts) AS us, value, event_id FROM events),
+bounds AS (
+  SELECT event_type, min(us) AS mn, max(us) AS mx
+  FROM pts GROUP BY event_type),
+bucketed AS (
+  SELECT p.event_type,
+         least({_W - 1}, ((p.us - b.mn) * {_W}) // (b.mx - b.mn + 1))
+           AS bucket,
+         p.us, p.value, p.event_id
+  FROM pts p JOIN bounds b USING (event_type))
+SELECT event_type, cast(bucket AS bigint) AS bucket,
+       (min({{'u': us, 'e': event_id, 'v': value}})).u AS t_first_us,
+       (min({{'u': us, 'e': event_id, 'v': value}})).v AS v_first,
+       (min({{'v': value, 'u': us, 'e': event_id}})).u AS t_min_us,
+       (min({{'v': value, 'u': us, 'e': event_id}})).v AS v_min,
+       (max({{'v': value, 'u': us, 'e': event_id}})).u AS t_max_us,
+       (max({{'v': value, 'u': us, 'e': event_id}})).v AS v_max,
+       (max({{'u': us, 'e': event_id, 'v': value}})).u AS t_last_us,
+       (max({{'u': us, 'e': event_id, 'v': value}})).v AS v_last
+FROM bucketed
+GROUP BY event_type, bucket
+ORDER BY event_type, bucket"""
+
+
+@register(
+    "m4_downsample_events",
+    oracle=_m4_oracle(),
+    tags=("timeseries", "downsample", "scale-pattern"),
+)
+def m4_downsample_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """M4 downsampling (Jugel et al., VLDB 2014): per (event_type, bucket)
+    of W = 48 uniform pixel-column buckets over each series' time range,
+    the first/last points by (ts, event_id) and the min/max points by
+    (value, ts, event_id) — the sufficient set for error-free line
+    rendering at width W. Each role is a lexicographic min/max over a
+    struct (Spark structs and DuckDB ROWs both order lexicographically,
+    so field order is part of the contract), which keeps the whole
+    reduction one map-side-combinable aggregate. Timestamps surface as
+    epoch microseconds so both engines compare integers."""
+    pts = (load_table(spark, sf_dir, "events")
+           .select("event_type", F.unix_micros("ts").alias("us"),
+                   "value", "event_id"))
+    bounds = pts.groupBy("event_type").agg(
+        F.min("us").alias("mn"), F.max("us").alias("mx"))
+    b = (pts.join(F.broadcast(bounds), "event_type")
+         .withColumn(
+             "bucket",
+             F.least(F.lit(_W - 1).cast("long"),
+                     F.expr(f"((us - mn) * {_W}) div (mx - mn + 1)"))))
+    firstlast = F.struct(F.col("us").alias("u"),
+                         F.col("event_id").alias("e"),
+                         F.col("value").alias("v"))
+    minmax = F.struct(F.col("value").alias("v"), F.col("us").alias("u"),
+                      F.col("event_id").alias("e"))
+    return (b.groupBy("event_type", "bucket")
+            .agg(F.min(firstlast).alias("fs"), F.max(firstlast).alias("ls"),
+                 F.min(minmax).alias("ms"), F.max(minmax).alias("xs"))
+            .select("event_type", F.col("bucket").cast("long").alias("bucket"),
+                    F.col("fs.u").alias("t_first_us"),
+                    F.col("fs.v").alias("v_first"),
+                    F.col("ms.u").alias("t_min_us"),
+                    F.col("ms.v").alias("v_min"),
+                    F.col("xs.u").alias("t_max_us"),
+                    F.col("xs.v").alias("v_max"),
+                    F.col("ls.u").alias("t_last_us"),
+                    F.col("ls.v").alias("v_last"))
+            .orderBy("event_type", "bucket"))

@@ -194,8 +194,8 @@ def test_corr_and_ols_invariants(spark, sf_correct):
     for r in _q(spark, sf_correct, "corr_value_props_by_type").collect():
         assert -1.0 <= r.pearson_r <= 1.0, r
     from pyspark.sql import functions as F
-    from redpanda_iceberg_duckdb_spark.operators.timeseries import \
-        _filled_grid
+    from redpanda_iceberg_duckdb_spark.operators.timeseries.hourly import \
+        filled_grid as _filled_grid
     means = {r.event_type: (r.xbar, r.ybar) for r in
              _filled_grid(spark, sf_correct)
              .groupBy("event_type")

@@ -180,7 +180,7 @@ def test_theilsen_cap_thins_long_series(spark):
     noiseless linear series every pairwise slope is identical, so the
     thinned estimate is EXACT — asserting both the bound and the lack of
     estimator damage in the clean case."""
-    from redpanda_iceberg_duckdb_spark.operators.robust_trend import (
+    from redpanda_iceberg_duckdb_spark.operators.timeseries.hourly import (
         thin_series)
 
     pts = spark.range(1000).select(

@@ -144,7 +144,7 @@ def test_m4_captures_planted_spikes_within_budget(spark):
     spike survives downsampling while output stays <= W rows/series."""
     import datetime as dt
 
-    from redpanda_iceberg_duckdb_spark.operators.m4_downsample import (
+    from redpanda_iceberg_duckdb_spark.operators.timeseries.regularize import (
         _W, m4_downsample_events)
 
     base = dt.datetime(2024, 1, 1)
@@ -274,7 +274,7 @@ def test_theilsen_recovers_trend_despite_outlier_hours(spark):
     lacks). Counts are planted by emitting that many events in hour h."""
     import datetime as dt
 
-    from redpanda_iceberg_duckdb_spark.operators.robust_trend import (
+    from redpanda_iceberg_duckdb_spark.operators.timeseries.change import (
         theilsen_hourly_trend)
 
     base = dt.datetime(2024, 1, 1)
@@ -351,7 +351,7 @@ def test_cusum_alarms_after_level_shift_not_on_flat_series(spark):
     flat one never (its CUSUM is identically zero)."""
     import datetime as dt
 
-    from redpanda_iceberg_duckdb_spark.operators.changepoint import (
+    from redpanda_iceberg_duckdb_spark.operators.timeseries.change import (
         cusum_changepoint_hourly)
 
     base = dt.datetime(2024, 1, 1)
@@ -524,7 +524,7 @@ def test_mase_separates_periodic_from_shifted_series(spark):
     scores far worse than the in-sample naive error (MASE >> 1)."""
     import datetime as dt
 
-    from redpanda_iceberg_duckdb_spark.operators.forecast_eval import (
+    from redpanda_iceberg_duckdb_spark.operators.timeseries.forecast import (
         _SEASON, mase_seasonal_naive)
 
     base = dt.datetime(2024, 1, 1)
