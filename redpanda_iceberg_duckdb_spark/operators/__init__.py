@@ -15,7 +15,6 @@ from . import (  # noqa: F401
     windows,         # window-function family
     multimodal,
     scalar,
-    similarity,
     clusters,
     dedup,
     sampling_packing,  # stratified sample / sequence packing / z-order
@@ -41,14 +40,11 @@ from . import (  # noqa: F401
     replay,          # St5 dead-letter split replayed batch-side (driver-visible)
     maintenance_audit,  # snapshot-retention keep/expire semantics
     stream_replay,   # St4 watermark-drop + keyed-TTL-dedup batch replays
-    semdedup,        # SemDeDup per-cluster embedding dedup (arXiv:2303.09540)
     spans,           # exact shared-substring spans (arXiv:2107.06499)
     merge_replay,    # MERGE upsert / SCD2 / outer interval join replays
     ranking,         # BM25 retrieval + inverted-index postings
     content_chunking,  # content-defined (rolling-hash) chunk boundaries
     setsim,          # exact set-similarity join via prefix filtering
-    quantizer,       # k-means Lloyd step + JL projection audit
-    quantizer_train,  # k-means to convergence + retrained-index recall
     frontier,        # Pareto-frontier skyline via bucket-prune-verify
     exact_stats,     # exact percentiles, token entropy, string_agg, pivot
     temporal8,       # native session_window, interval islands, forward asof
@@ -60,11 +56,9 @@ from . import (  # noqa: F401
     genparity,       # seeded-generator parity vs committed snapshot (F9/F8)
     pipeline_audit,  # split-leakage near-dup audit + embedding dim stats
     training_order,  # deterministic epoch shuffle (two-phase hash ranks)
-    retrieval9,      # MRR@10 (exact integer reciprocals) + greedy MMR
     layout9,         # file-skipping audit: natural vs z-order layouts
     sketches9,       # mergeable sliding-window HLL (register-wise max)
     coverage9,       # greedy max-coverage data selection (submodular)
-    contrastive9,    # hard-negative mining with positive-negative margins
     experiment_stats,  # CUPED variance-reduced A/B readout (WSDM 2013)
     ivm,             # join-delta incremental view maintenance (SIGMOD 1986)
     pca_power,       # Gramian sufficient-stats PCA + power iteration
@@ -77,7 +71,6 @@ from . import (  # noqa: F401
     offpolicy,       # IPS/SNIPS counterfactual policy value
     data_quality,    # one-pass Deequ-style constraint suite
     ivm_stream,      # recurring IVM refresh through the foreachBatch sink
-    retrieval10,     # recall/MRR vs nprobe: the IVF dial graded as data
     preference10,    # Bradley-Terry preference strengths (MM iteration)
     domain10,        # DSIR hashed-ngram importance weights, top-k select
     calibration10,   # ECE reliability bins + Cohen's kappa agreement
@@ -90,30 +83,24 @@ from . import (  # noqa: F401
     cdcdiff10,       # snapshot diff -> insert/update/delete changelog
     experiment10,    # difference-in-differences + Qini uplift deciles
     valuation10,     # exact 3-group Shapley data valuation
-    retrieval10b,    # NDCG@10 with integer fixed-point log discounts
     sampling10b,     # Neyman allocation, exact largest-remainder split
     attribution10,   # U-shaped multi-touch attribution, integer credits
     dedup10b,        # sorted-neighborhood blocking graded by rank distance
-    density10,       # grid-blocked DBSCAN core/border/noise labeling
     recsys10,        # item-item CF cosine neighbors, capped baskets
     basket10,        # Apriori brand pairs + interval sweep-line concurrency
     nblm10,          # integer-lattice NB confusion, bigram surprisal, Heaps
     conformal10,     # exact split-conformal intervals + coverage audit
-    kcenter10,       # farthest-point k-center coreset on the int lattice
     sketches10,      # AMS tug-of-war F2 sketch vs exact self-join size
     privacy10,       # t-closeness ordered-EMD audit (k-anon/l-div trio)
     mixture10b,      # alpha=1/2 temperature mixture, exact apportionment
     sprt10,          # Wald SPRT sequential decision on micro-nat lattice
     shard10,         # rendezvous-hashing shard audit (minimal disruption)
     sprt_stream,     # SPRT gate maintained across streaming micro-batches
-    similarity11,    # banded random-hyperplane LSH cosine near-dups
-    pq11,            # product-quantization encode + distortion audit
     ranking11,       # Rocchio feedback + tokenizer fertility by lang
     eval11,          # decision stump, pinball loss, Fano, Davies-Bouldin
     text11,          # inter-source unigram KL divergence matrix
     features11,      # rolling-origin CV folds + WoE/IV binning
     substring_dedup,  # per-doc duplicated-span stats + removal cut-list
-    pq_train,        # trained per-subspace PQ codebooks + recall delta
     state_metrics,   # streaming state-store size accounting (watermark)
     repetition12,    # Gopher repetition signals + intra-doc spans
     metrics12,       # degree assortativity + one-pass closed-form OLS
@@ -123,7 +110,6 @@ from . import (  # noqa: F401
     evalrank12,      # average precision via two-phase (no-global-sort) ranks
     features12,      # hashing-trick collision audit (bucket-load histogram)
     privacy12,       # Laplace-mechanism DP counts on the micro-nat lattice
-    mutualnn12,      # mutual nearest neighbors (bitext-mining primitive)
     lm12,            # bigram-LM perplexity quality filter (micro-nats)
     richness12,      # Chao1 + Good-Turing from frequency-of-frequencies
     survival12,      # Nelson-Aalen cumulative hazard (nano lattice)
@@ -151,7 +137,6 @@ from . import (  # noqa: F401
     burst13,         # token burstiness cf/df (template-spam signal)
     hapax13,         # hapax share + TTR per source (lexical richness)
     wav_ingest14,    # WAV dead-letter ingest replay (audio St5)
-    embed14,         # Matryoshka recall, linear MMD, exact medoids
     robust14,        # Huber location IRLS to convergence
     multimodal14,    # frame-indexed container walk + frame sampling
     rouge14,         # ROUGE-2 multiset overlap on LSH candidate pairs
@@ -161,7 +146,6 @@ from . import (  # noqa: F401
     luhn14,          # Luhn mod-10 check-digit audit (PII validator)
     tws15,           # transformWithState dedup replay (state API v2)
     sql15,           # Spark 4 SQL surfaces: pipe, collation, session_window
-    embed15,         # linear CKA between embedding dim-halves
     sinkhorn15,      # entropic OT plan (shared generated iteration)
     rater15,         # Krippendorff alpha (missing-rating agreement)
     lm15,            # speculative acceptance + beam-search decode
@@ -185,4 +169,10 @@ from .timeseries import (  # noqa: F401,E402
     forecast,        # Holt, Holt-Winters, MASE, trend/seasonal strength
     shape,           # ACF, CCF, periodogram, Haar energy, SAX, DTW
     change,          # CUSUM, binary segmentation, Theil-Sen
+)
+from .vectors import (  # noqa: F401,E402
+    search,          # exact/IVF top-k, multiprobe, recall, MRR, NDCG, MMR
+    quantization,    # k-means step + training, PQ audits, ADC recall, JL
+    mining,          # LSH near-dups, mutual NN, hard negatives, SemDeDup
+    clustering,      # silhouette, MMD, medoids, CKA, DBSCAN, k-center
 )

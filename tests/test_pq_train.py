@@ -1,7 +1,8 @@
-"""Trained-codebook PQ (pq_train.py) properties beyond the driver oracle:
-Lloyd training must not INCREASE any subspace's quantization distortion
-relative to the untrained label-cell codebooks (pq11.py), and the trained
-ADC recall evaluation must keep the probe-set contract."""
+"""Trained-codebook PQ (operators/vectors/) properties beyond the driver
+oracle: Lloyd training must not INCREASE any subspace's quantization
+distortion relative to the untrained label-cell codebooks, the trained
+ADC recall evaluation must keep the probe-set contract, and the trainer's
+driver and distributed paths must agree."""
 
 from __future__ import annotations
 
@@ -37,17 +38,20 @@ def test_trained_recall_probe_contract(spark):
 
 
 def test_driver_and_distributed_training_paths_agree(spark, monkeypatch):
-    """The round-13 driver-resident trainer must be byte-identical to the
+    """The driver-resident trainer must be byte-identical to the
     distributed per-round loop: same sufficient stats, same joint round
     count (same init, same first-minimum tie-break, same mover
-    accounting). Force the distributed path by zeroing the sample bound
-    and compare against the driver path on the same data."""
-    from redpanda_iceberg_duckdb_spark.operators import pq_train as P
+    accounting), for PQ (8 subspaces) and k-means (1 subspace). Force the
+    distributed path by zeroing the sample bound and compare against the
+    driver path on the same data."""
+    from redpanda_iceberg_duckdb_spark.operators.vectors import lloyd
 
     sf = "/root/testdata/sf0.001"
-    driver_stats, driver_rounds = P._train_pq_stats(spark, sf)
-    monkeypatch.setattr(P, "_DRIVER_TRAIN_BOUND", 0)
-    dist_stats, dist_rounds = P._train_pq_stats(spark, sf)
-    assert driver_rounds == dist_rounds
-    assert [(s, c, n, list(a)) for s, c, n, a in driver_stats] == \
-           [(s, c, n, list(a)) for s, c, n, a in dist_stats]
+    for m in (lloyd.PQ_M, 1):
+        driver_stats, driver_rounds = lloyd.train_lloyd(spark, sf, m)
+        with monkeypatch.context() as mp:
+            mp.setattr(lloyd, "DRIVER_TRAIN_BOUND", 0)
+            dist_stats, dist_rounds = lloyd.train_lloyd(spark, sf, m)
+        assert driver_rounds == dist_rounds, m
+        assert [(s, c, n, list(a)) for s, c, n, a in driver_stats] == \
+               [(s, c, n, list(a)) for s, c, n, a in dist_stats], m

@@ -41,9 +41,10 @@ def test_edge_cache_misses_on_data_rewrite(spark, tmp_path):
 
 
 def test_train_cache_misses_on_data_rewrite(spark, tmp_path):
-    """Same hazard for quantizer_train._TRAIN_CACHE: in-place rewrite of
-    embeddings.parquet must re-train, not serve stale assignments."""
-    from redpanda_iceberg_duckdb_spark.operators.quantizer_train import (
+    """Same hazard for the trained k-means assignment, memoized through
+    cache.cached: in-place rewrite of embeddings.parquet must re-train,
+    not serve stale assignments."""
+    from redpanda_iceberg_duckdb_spark.operators.vectors.lloyd import (
         train_assignments)
 
     d = str(tmp_path / "ds")

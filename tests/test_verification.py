@@ -8,8 +8,8 @@ from __future__ import annotations
 import inspect
 
 from redpanda_iceberg_duckdb_spark import verification
-from redpanda_iceberg_duckdb_spark.operators import (
-    contamination, quantizer_train)
+from redpanda_iceberg_duckdb_spark.operators import contamination
+from redpanda_iceberg_duckdb_spark.operators.vectors import quantization
 from redpanda_iceberg_duckdb_spark.registry import all_queries
 
 _PKG = "redpanda_iceberg_duckdb_spark"
@@ -37,11 +37,11 @@ def test_double_dot_relative_import_climbs_one_package():
 
 
 def test_multiline_parenthesized_import_names_captured():
-    # quantizer_train imports from .similarity with a multi-line
+    # quantization imports the trainer from .lloyd with a multi-line
     # parenthesized list — the old line-regex stopped at the first physical
     # line; ast must see the module regardless.
-    deps = _deps(quantizer_train)
-    assert f"{_PKG}.operators.similarity" in deps
+    deps = _deps(quantization)
+    assert f"{_PKG}.operators.vectors.lloyd" in deps
 
 
 def test_deps_actually_contribute_to_query_sha(monkeypatch):
